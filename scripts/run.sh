@@ -18,6 +18,8 @@ CP=$(cat /tmp/cp.txt)
 # distro carries no launcher/target build dirs to infer it from).
 export SPARK_HOME="${SPARK_HOME:-/opt/spark}"
 export SPARK_SCALA_VERSION="${SPARK_SCALA_VERSION:-2.13}"
+# default heap: half of MemTotal, clamped to 2-8 GB
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)"
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
@@ -34,5 +36,4 @@ exec java \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -XX:ReservedCodeCacheSize=1g \
-  -XX:CICompilerCount=12 \
-  -Xmx${SPARK_DRIVER_MEM:-16g} -cp "$CP" "$@"
+  -Xmx${SPARK_DRIVER_MEM:-$HEAP} -cp "$CP" "$@"

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Materialize, Similarity}
+import Runtime.Timed
 
 /** ANN flagship at ~1M vectors: measured recall@k of every approximate
   * ANN path against exact brute-force ground truth, at three orders of
@@ -64,23 +65,14 @@ object AnnFlagship {
     val nVecs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_ann1m"
     val nClusters = if (args.length > 2) args(2).toInt else 1000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      // GRAFT_INDEX_DIR: durable index mode — a SECOND flagship run in a
-      // fresh JVM then serves every ANN path from the parquet indexes
-      // (assignment, codes, centroids, codebook) without rebuilding,
-      // measuring pure serve cost the way a deployed cluster would see it
-      .config(graft.operators.Materialize.DirConf,
-        sys.env.getOrElse("GRAFT_INDEX_DIR", ""))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rt = Runtime(Runtime.session("graft-ann-flagship",
+      extra = Seq(
+        // GRAFT_INDEX_DIR: durable index mode — a SECOND flagship run in a
+        // fresh JVM then serves every ANN path from the parquet indexes
+        // (assignment, codes, centroids, codebook) without rebuilding,
+        // measuring pure serve cost the way a deployed cluster would see it
+        Materialize.DirConf -> sys.env.getOrElse("GRAFT_INDEX_DIR", ""))))
+    val spark = rt.spark
 
     // corpus geometry is part of the directory name: a run with a
     // different nVecs/nClusters against an existing workDir must never
@@ -98,15 +90,8 @@ object AnnFlagship {
     val emb = spark.read.parquet(vecDir)
     val n = Some(nVecs)
 
-    def timed(name: String)(f: => DataFrame): (DataFrame, Double) = {
-      val t0 = System.nanoTime()
-      val r = f.localCheckpoint()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"stage $name%-8s $dt%8.1f s")
-      (r, dt)
-    }
-    val (truth, tBrute) =
-      timed("brute")(Similarity.bruteForceTopK(emb, NQueries, K, n))
+    val Timed(truth, tBrute, _) =
+      rt.stage("brute")(Similarity.bruteForceTopK(emb, NQueries, K, n).localCheckpoint())
     val truthPairs = truth.select("query_id", "cand_id")
     val nTruth = truthPairs.count()
     def recallOf(approx: DataFrame): Double =
@@ -170,7 +155,7 @@ object AnnFlagship {
             corpusCount = n)))
       }
     val results = (methods ++ opqMethods).map { case (name, f) =>
-      val (df, dt) = timed(name)(f())
+      val Timed(df, dt, _) = rt.stage(name)(f().localCheckpoint())
       name -> (recallOf(df), dt)
     }
     val builds = Materialize.buildTimes
@@ -179,7 +164,7 @@ object AnnFlagship {
       s""""$nm":{"recall":${r4(rec)},"sec":${r4(dt)}}""" }.mkString(",")
     val buildJson = builds.toSeq.sortBy(-_._2)
       .map { case (k, v) => s""""$k":${r4(v)}""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"ann_1m","n_vectors":$nVecs,"dim":${Similarity.Dim},"k":$K,"n_queries":$NQueries,"truth_pairs":$nTruth,"brute_sec":${r4(tBrute)},$methodJson,"index_build":$buildJson,"cpus":$cpus}""")
+    println(s"""{"metric":"ann_1m","n_vectors":$nVecs,"dim":${Similarity.Dim},"k":$K,"n_queries":$NQueries,"truth_pairs":$nTruth,"brute_sec":${r4(tBrute)},$methodJson,"index_build":$buildJson,"cpus":${Runtime.cpus}}""")
     spark.stop()
   }
 }

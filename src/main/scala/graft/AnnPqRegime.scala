@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Materialize, Similarity}
+import Runtime.Timed
 
 /** PQ's memory-regime adjudication at 10M vectors (r9 verdict item 4):
   * `ann_ivf_int8` dominates `ann_ivfpq` at 1M on recall AND serve cost,
@@ -33,25 +34,17 @@ object AnnPqRegime {
     val nVecs = args.headOption.map(_.toLong).getOrElse(10000000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_ann10m"
     val nClusters = if (args.length > 2) args(2).toInt else 1000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-pq-regime")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      // struct-buffer aggregates (the assignment argmax) run through
-      // ObjectHashAggregate, whose sort-based fallback triggers at 128
-      // in-memory keys by default — absurdly conservative for ~50 B
-      // buffers: at 10M vectors the fallback sorted (and spilled) the
-      // whole N×K scored stream. ~300k keys/task × 50 B ≈ 16 MB —
-      // keep it hashed.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .config(Materialize.DirConf, sys.env.getOrElse("GRAFT_INDEX_DIR", ""))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rt = Runtime(Runtime.session("graft-ann-pq-regime",
+      extra = Seq(
+        // struct-buffer aggregates (the assignment argmax) run through
+        // ObjectHashAggregate, whose sort-based fallback triggers at 128
+        // in-memory keys by default — absurdly conservative for ~50 B
+        // buffers: at 10M vectors the fallback sorted (and spilled) the
+        // whole N×K scored stream. ~300k keys/task × 50 B ≈ 16 MB —
+        // keep it hashed.
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4000000",
+        Materialize.DirConf -> sys.env.getOrElse("GRAFT_INDEX_DIR", ""))))
+    val spark = rt.spark
 
     // the AnnFlagship corpus recipe — THE SAME generator, not a copy:
     // the cross-scale recall comparison in ANN_1M.md is only valid while
@@ -65,15 +58,8 @@ object AnnPqRegime {
     val emb = spark.read.parquet(vecDir)
     val n = Some(nVecs)
 
-    def timed(name: String)(f: => DataFrame): (DataFrame, Double) = {
-      val t0 = System.nanoTime()
-      val r = f.localCheckpoint()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"stage $name%-12s $dt%8.1f s")
-      (r, dt)
-    }
-    val (truth, tBrute) =
-      timed("brute")(Similarity.bruteForceTopK(emb, NQueries, K, n))
+    val Timed(truth, tBrute, _) =
+      rt.stage("brute")(Similarity.bruteForceTopK(emb, NQueries, K, n).localCheckpoint())
     val truthPairs = truth.select("query_id", "cand_id")
     val nTruth = truthPairs.count()
     def recallOf(approx: DataFrame): Double =
@@ -99,7 +85,7 @@ object AnnPqRegime {
       "ivf_int8_p4" -> (() => Similarity.ivfInt8TopK(emb, 8, NQueries, K,
         nprobe = 4, refine = 4, corpusCount = n)))
     val results = methods.map { case (name, f) =>
-      val (df, dt) = timed(name)(f())
+      val Timed(df, dt, _) = rt.stage(name)(f().localCheckpoint())
       name -> (recallOf(df), dt)
     }
 
@@ -142,7 +128,7 @@ object AnnPqRegime {
       s""""k":$K,"n_queries":$NQueries,"truth_pairs":$nTruth,""" +
       s""""brute_sec":${r4(tBrute)},$methodJson,""" +
       s""""index_bytes":$sizeJson,"raw_corpus_bytes":$rawBytes,""" +
-      s""""index_build":$buildJson,"cpus":$cpus}""")
+      s""""index_build":$buildJson,"cpus":${Runtime.cpus}}""")
     spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Search}
+import Runtime.Timed
 
 /** Band-index LSM lifecycle at ~1 GB (r11 verdict item 8): the dedup
   * band index driven through the same end-to-end lifecycle
@@ -36,25 +37,8 @@ object BandLifecycleFlagship {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_bandlife1g"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-band-lifecycle-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[T](name: String)(f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"stage $name%-16s $dt%8.1f s")
-      (r, dt)
-    }
+    val rt = Runtime(Runtime.session("graft-band-lifecycle-flagship"))
+    val spark = rt.spark
 
     // ---- corpus (shared generator; reused across runs via _SUCCESS)
     val corpusDir = s"$work/corpus"
@@ -78,11 +62,10 @@ object BandLifecycleFlagship {
     def rawDir(g: Int) = s"$work/raw_g$g"
     def buildRaw(g: Int, lo: Long, hi: Long): Unit =
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"${rawDir(g)}/_SUCCESS"))) {
-        val (_, t) = timed(s"build_raw_g$g") {
+        rt.stage(s"build_raw_g$g") {
           Dedup.fastBandTable(Dedup.wordGrams(slice(lo, hi)))
             .write.mode("overwrite").parquet(rawDir(g))
         }
-        val _ = t
       }
     buildRaw(0, 0L, nBase)
     (1 to 6).foreach(g =>
@@ -111,7 +94,7 @@ object BandLifecycleFlagship {
       // set for every g silently dropped their candidates early)
       val liveG = (if (g >= 3) live else docs)
         .filter(col("doc_id") < nBase + g * dSize)
-      val (probe, tProbe) = timed(s"probe_g$g") {
+      val Timed(probe, tProbe, _) = rt.stage(s"probe_g$g") {
         // staged like the registry twin: the candidate self-join and
         // the recap's two consumers would otherwise re-run the fold
         // up to 4× inside the timed region (review finding)
@@ -133,10 +116,10 @@ object BandLifecycleFlagship {
       s"20% trigger expected at generation 6 (3%×6 = 18%→22% of 82%), fired at $firedAt")
 
     // ---- compact: write the served view as the new base
-    val (_, tCompact) = timed("compact") {
+    val tCompact = rt.stage("compact") {
       Dedup.serveBandsLsm(gens(6))
         .write.mode("overwrite").parquet(s"$work/base_epoch2")
-    }
+    }.wallSec
     val compacted = spark.read.parquet(s"$work/base_epoch2")
 
     // gate 1: stack-vs-compacted probe parity
@@ -149,7 +132,7 @@ object BandLifecycleFlagship {
       s"stack-vs-compacted probe mismatch: ${probeCompacted.size} vs ${lastServedProbe.size}")
 
     // gate 2: rebuild parity (EXACT — compacted-epoch cap)
-    val (rebuild, tRebuild) = timed("rebuild_parity") {
+    val Timed(rebuild, tRebuild, _) = rt.stage("rebuild_parity") {
       Dedup.cappedBands(Dedup.wordGrams(live), Dedup.MaxBandBucket,
         table = Dedup.fastBandTable).localCheckpoint()
     }

@@ -1,30 +1,32 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
+import com.fasterxml.jackson.databind.JsonNode
+import Runtime.{mapper, obj}
 
 /** Headline benchmark: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line
+  * SPARK_GRAFT_SF_DIR in the [[Runtime]] session and prints two JSON
+  * lines: the detailed result, then a compact
   * {"metric":"cpu_total","value":<task CPU sec>,"unit":"sec",
-  *  "wall_total":<sec>,...} — task CPU is the committed gate signal
-  * (wall drifts ±20% with host load on this box, BENCH_NOTES_r10.md);
-  * per-query wall ("queries") and CPU ("cpu") live in the
+  *  "wall_total":<sec>,...} line LAST. Task CPU is the gate signal (wall
+  * drifts ±20% with host load, BENCH_NOTES_r10.md); per-query wall
+  * ("queries") and CPU ("cpu") are in the detailed line and the
   * bench_detail.json sidecar.
   *
   * Hardened so one bad query (or a contaminated host) cannot zero the
   * whole measurement:
-  *  - stale leftover graft JVMs from timed-out runs are killed at start
-  *    (they otherwise compete for the same 32 cores and wreck timings);
+  *  - other graft Bench/Verify JVMs left over from timed-out runs are
+  *    killed at start (they compete for the same cores and wreck
+  *    timings; GRAFT_KILL_STALE=false keeps them);
   *  - a short loadavg gate waits out host CPU-steal bursts;
-  *  - each query runs under a watchdog: on timeout its job group is
+  *  - each query runs under [[Runtime.run]]'s watchdog
+  *    (GRAFT_QUERY_TIMEOUT, default 240 s): on timeout its job group is
   *    cancelled and the bench moves on, recording -1 for that query and
   *    naming it under "errors" — partial results beat no results.
   */
 object Bench {
-
   /** Kill OTHER leftover graft benchmark/verify JVMs (never self, never
-    * sbt). A prior timed-out run keeps its 32-thread JVM alive in the
-    * background; measuring alongside it is the documented way this host
-    * produces garbage numbers and heartbeat storms. */
+    * sbt): measuring alongside a timed-out run's JVM is the documented
+    * way this host produces garbage numbers and heartbeat storms. */
   private def killStaleJvms(): Unit = {
     val self = ProcessHandle.current()
     val ancestors = Iterator.iterate(Option(self))(_.flatMap(h => {
@@ -59,83 +61,57 @@ object Bench {
     }
   }
 
-  /** Per-query seconds for the regression diff. Sources, in order of
-    * preference:
+  /** The previous round's per-query wall and CPU seconds, its fixed-work
+    * calibration (min of start/end; -1 when absent) and its index builds
+    * keyed by [[buildKeyOf]] (duplicate keys summed). */
+  private final case class Baseline(wall: Map[String, Double] = Map.empty,
+      cpu: Map[String, Double] = Map.empty, calib: Double = -1.0,
+      builds: Map[String, Double] = Map.empty)
+
+  /** The regression baseline. Sources, in order of preference:
     *  1. GRAFT_PREV_BENCH (explicit override);
-    *  2. the newest committed bench detail file (`bench_detail.json` or
-    *     `BENCH_r{N}_local.json`) — written by this main each run, full
-    *     per-query precision, always machine-parseable;
+    *  2. the newest bench detail file (`bench_detail.json` or
+    *     `BENCH_r{N}_local.json`) — full precision, always parseable;
     *  3. the newest driver-written BENCH_r{N}.json — its "tail" is a
-    *     2000-char log capture that may truncate the detailed JSON line,
-    *     so try every `{"metric":` candidate in it and keep the first
-    *     that parses with a non-empty "queries" object.
-    * Absent or unparsable history → empty map (first round, no diff).
-    * The third element is the baseline's recorded fixed-work calibration
-    * (min of its start/end reps; -1 when the file predates calibration)
-    * — the regression diff divides by it to cancel host-speed drift.
-    * The fourth is the baseline's per-key index_build map (r12 verdict
-    * item 4: index_build_total doubled with zero gate coverage), keyed
-    * with the content fingerprint suffix stripped — the `@hash` varies
-    * when testdata regenerates, the `name:args` prefix is the stable
-    * identity of a build. */
-  private def prevRoundTimes(sfDir: String)
-      : (Map[String, Double], Map[String, Double], Double,
-         Map[String, Double]) = try {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def mapOf(node: com.fasterxml.jackson.databind.JsonNode,
-        field: String): Map[String, Double] = {
+    *     2000-char log capture that may truncate the detailed line, so
+    *     every `{"metric":` candidate in it is tried and the first that
+    *     parses with a non-empty "queries" object wins.
+    * A file recorded at another scale factor is skipped (it would flag
+    * every query). Absent or unparsable history → empty baseline. */
+  private def baseline(sfDir: String): Baseline = try {
+    def mapOf(node: JsonNode, field: String): Map[String, Double] = {
       val it = node.path(field).fields()
       val b = Map.newBuilder[String, Double]
       while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble(-1.0) }
       b.result()
     }
-    def queriesOf(node: com.fasterxml.jackson.databind.JsonNode)
-        : (Map[String, Double], Map[String, Double], Double,
-           Map[String, Double]) = {
-      // a detail file records the sf dir it ran at; comparing against a
-      // different scale factor would flag every query — skip it. Compare
-      // normalized basenames so path spelling ("/a/sf0.1" vs "sf0.1")
-      // doesn't bypass the guard; ANY mismatch skips the file.
-      def normSf(s: String): String = s.stripSuffix("/").split('/').last
+    def normSf(s: String): String = s.stripSuffix("/").split('/').last
+    def of(node: JsonNode): Baseline = {
       val sf = node.path("sf").asText("")
-      if (sf.nonEmpty && normSf(sf) != normSf(sfDir))
-        (Map.empty, Map.empty, -1.0, Map.empty)
+      if (sf.nonEmpty && normSf(sf) != normSf(sfDir)) Baseline()
       else {
         val cal = node.path("calib_cpu_sec")
-        val (cs, ce) = (cal.path("start").asDouble(-1.0),
-          cal.path("end").asDouble(-1.0))
-        val c = if (cs > 0 && ce > 0) math.min(cs, ce) else math.max(cs, ce)
-        // baseline builds get the SAME fingerprint-strip + duplicate-SUM
-        // reduction as the current round (advisor r13: Map.map let a
-        // stripped-key collision keep only the last value, undercounting
-        // the baseline and faking a >1.5x flag). Unparsable entries read
-        // as mapOf's -1.0 sentinel — drop them BEFORE summing or they
-        // deflate a sibling value under the same stripped key (review
-        // finding).
-        (mapOf(node, "queries"), mapOf(node, "cpu"), c,
-          mapOf(node, "index_build").toSeq
-            .filter(_._2 >= 0)
+        val (cs, ce) = (cal.path("start").asDouble(-1.0), cal.path("end").asDouble(-1.0))
+        // unparsable builds read as -1: drop them before summing, or they
+        // deflate a sibling under the same stripped key
+        Baseline(mapOf(node, "queries"), mapOf(node, "cpu"),
+          if (cs > 0 && ce > 0) math.min(cs, ce) else math.max(cs, ce),
+          mapOf(node, "index_build").toSeq.filter(_._2 >= 0)
             .map { case (k, v) => buildKeyOf(k) -> v }
             .groupMapReduce(_._1)(_._2)(_ + _))
       }
     }
-    def fromFile(p: String)
-        : (Map[String, Double], Map[String, Double], Double,
-           Map[String, Double]) = try {
-      val root = om.readTree(new java.io.File(p))
-      if (root.has("queries")) queriesOf(root)
+    def fromFile(p: String): Baseline = try {
+      val root = mapper.readTree(new java.io.File(p))
+      if (root.has("queries")) of(root)
       else if (root.has("tail"))
         root.get("tail").asText().linesIterator.flatMap { l =>
           Iterator.iterate(l.indexOf("{\"metric\":"))(i => l.indexOf("{\"metric\":", i + 1))
             .takeWhile(_ >= 0).map(l.substring(_))
-        }.map(s => try queriesOf(om.readTree(s)) catch {
-          case _: Throwable =>
-            (Map.empty[String, Double], Map.empty[String, Double], -1.0,
-              Map.empty[String, Double]) })
-          .find(_._1.nonEmpty)
-          .getOrElse((Map.empty, Map.empty, -1.0, Map.empty))
-      else (Map.empty, Map.empty, -1.0, Map.empty)
-    } catch { case _: Throwable => (Map.empty, Map.empty, -1.0, Map.empty) }
+        }.map(s => try of(mapper.readTree(s)) catch { case _: Throwable => Baseline() })
+          .find(_.wall.nonEmpty).getOrElse(Baseline())
+      else Baseline()
+    } catch { case _: Throwable => Baseline() }
     val files = Option(new java.io.File(".").listFiles()).toSeq.flatten
     val detail = files.filter(f => f.getName == "bench_detail.json" ||
         f.getName.matches("BENCH_r\\d+_local\\.json"))
@@ -143,11 +119,10 @@ object Bench {
     val driverArt = files.filter(_.getName.matches("BENCH_r\\d+\\.json"))
       .sortBy(f => f.getName.replaceAll("\\D", "").toInt).lastOption.map(_.getPath)
     (sys.env.get("GRAFT_PREV_BENCH").toSeq ++ detail ++ driverArt)
-      .iterator.map(fromFile).find(_._1.nonEmpty)
-      .getOrElse((Map.empty, Map.empty, -1.0, Map.empty))
+      .iterator.map(fromFile).find(_.wall.nonEmpty).getOrElse(Baseline())
   } catch { case e: Throwable =>
     System.err.println(s"[bench] no previous-round baseline: $e")
-    (Map.empty, Map.empty, -1.0, Map.empty) }
+    Baseline() }
 
   /** Stable cross-round identity of an index-build key: the
     * `name:args` prefix with the trailing `@<content fingerprint>`
@@ -158,47 +133,96 @@ object Bench {
     if (i > 0) k.substring(0, i) else k
   }
 
-  /** FIXED-WORK CPU CALIBRATION (r10 verdict item 4): a deterministic
-    * xorshift spin — zero I/O, zero shuffle, a constant instruction
-    * count per run — whose task-CPU seconds on this binary+JVM are a
-    * host-speed probe. Two rounds of "shared-query CPU up 1.1–1.3×,
-    * attributed to windows" could not be falsified because task CPU,
-    * while immune to wall-clock steal, still inflates with SMT
-    * contention / frequency scaling / contended cycles for IDENTICAL
-    * work. The calibration runs at bench start AND end (min of 3 reps
-    * each — rep 1 absorbs JIT); the in-bench regression gate divides
-    * per-query CPU by the calibration ratio automatically (clamped to
-    * [0.5, 2]) when the baseline file recorded its own calib:
-    * normalized_r11/r10 = (cpu_r11 / calib_r11) / (cpu_r10 / calib_r10).
-    * Its job groups are NOT registry names, so it never counts into
-    * cpu_total. */
+  /** FIXED-WORK CPU CALIBRATION: a deterministic xorshift spin — zero
+    * I/O, zero shuffle, a constant instruction count — whose task-CPU
+    * seconds are a host-speed probe. Task CPU is immune to wall-clock
+    * steal but still inflates with SMT contention and frequency scaling
+    * for identical work, so the regression gate divides per-query CPU by
+    * the calibration ratio against the baseline's own (clamped to
+    * [0.5, 2]). Runs at bench start and end, min of 3 reps each (rep 1
+    * absorbs JIT). Its job groups are not registry names, so it never
+    * counts into cpu_total. */
   private val CalibTasks = 64
   private val CalibIters = 25000000
 
-  private def calibrate(spark: SparkSession, tag: String,
-      cpuOf: String => Long, drain: () => Unit): Double = {
-    val sc = spark.sparkContext
-    import spark.implicits._
+  private def calibrate(rt: Runtime, tag: String): Double = {
+    import rt.spark.implicits._
     val iters = CalibIters
     (1 to 3).map { _ =>
-      val before = { drain(); cpuOf(tag) }
-      sc.setJobGroup(tag, tag, interruptOnCancel = true)
-      try {
-        spark.range(0, CalibTasks, 1, CalibTasks).as[Long].map { i =>
+      rt.timed(tag) {
+        rt.spark.range(0, CalibTasks, 1, CalibTasks).as[Long].map { i =>
           var x = i + 0x9e3779b97f4a7c15L
           var j = 0
           while (j < iters) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; j += 1 }
           x
         }.filter(_ != 0L).count()
-      } finally sc.clearJobGroup()
-      drain()
-      (cpuOf(tag) - before) / 1e9
+      }.cpuSec
     }.min
+  }
+
+  private def r3(v: Double): Double = math.round(v * 1000.0) / 1000.0
+
+  /** `now / before` rounded to 0.01 when `now` exceeds 1.5× `before` by
+    * more than `floor` seconds — the floor keeps JVM noise on short
+    * queries out of the gate. */
+  private def ratio(now: Double, before: Double, floor: Double): Option[Double] =
+    if (before > 0 && now > 0 && now > before * 1.5 && now - before > floor)
+      Some(math.round(now / before * 100.0) / 100.0)
+    else None
+
+  /** What the two result lines carry. `wall` holds best-observed wall
+    * seconds per query (-1 when both runs failed), `cpu` the timed
+    * pass's task CPU seconds. */
+  final case class Result(wall: collection.Map[String, Double],
+      cpu: collection.Map[String, Double], errors: collection.Map[String, String],
+      regressions: collection.Map[String, Double],
+      regressionsWall: collection.Map[String, Double],
+      regressionsBoth: collection.Map[String, Double],
+      builds: collection.Map[String, Double],
+      buildRegressions: collection.Map[String, Double],
+      calibStart: Double, calibEnd: Double, sf: String) {
+    def cpuTotal: Double = r3(cpu.values.sum)
+    def wallTotal: Double = r3(wall.values.filter(_ >= 0).sum)
+    def buildTotal: Double = r3(builds.values.sum)
+  }
+
+  private def byValueDesc(m: collection.Map[String, Double]) = m.toSeq.sortBy(-_._2)
+  private def calibJson(r: Result) = obj(Seq("start" -> r3(r.calibStart), "end" -> r3(r.calibEnd)))
+
+  def detailLine(r: Result): String = mapper.writeValueAsString(obj(Seq(
+    "metric" -> "cpu_total", "value" -> r.cpuTotal, "unit" -> "sec",
+    "wall_total" -> r.wallTotal,
+    "queries" -> obj(r.wall.map { case (k, v) => k -> r3(v) }),
+    "cpu" -> obj(r.cpu.map { case (k, v) => k -> r3(v) }),
+    "errors" -> obj(r.errors), "regressions" -> obj(r.regressions),
+    "regressions_wall" -> obj(r.regressionsWall),
+    "regressions_both" -> obj(r.regressionsBoth),
+    "index_build" -> obj(byValueDesc(r.builds).map { case (k, v) => k -> r3(v) }),
+    "index_build_total" -> r.buildTotal,
+    "index_build_regressions" -> obj(byValueDesc(r.buildRegressions)),
+    "calib_cpu_sec" -> calibJson(r), "sf" -> r.sf)))
+
+  /** The graded line. Its error and regression maps are capped at the 8
+    * worst so it stays well inside a 2000-char output tail even in a
+    * pathological round; the detailed line and file carry the full maps. */
+  def compactLine(r: Result): String = {
+    def cap8(m: Seq[(String, Any)]) =
+      obj(m.take(8) ++ (if (m.size > 8) Seq("_more" -> (m.size - 8)) else Nil))
+    mapper.writeValueAsString(obj(Seq(
+      "metric" -> "cpu_total", "value" -> r.cpuTotal, "unit" -> "sec",
+      "wall_total" -> r.wallTotal, "nqueries" -> r.wall.size,
+      "detail" -> "bench_detail.json", "errors" -> cap8(r.errors.toSeq),
+      "regressions" -> cap8(byValueDesc(r.regressions)),
+      "regressions_both" -> cap8(byValueDesc(r.regressionsBoth)),
+      "index_build_total" -> r.buildTotal, "calib_cpu_sec" -> calibJson(r),
+      "sf" -> r.sf)))
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // an iteration aid; a blank GRAFT_ONLY still runs the whole registry
+    val selected = Runtime.selected(SparkEntry.queries)
+    val fullRun = selected.size == SparkEntry.queries.size
     // covers the query's warm run (cold codegen, worst observed ~130s)
     // plus its timed run
     val queryTimeoutSec =
@@ -209,111 +233,25 @@ object Bench {
     // half the cores: an idle host sits near 0; a leftover competing JVM
     // or steal burst shows as ~cores. The 1-min average decays with ~1 min
     // time constant, so 60 s of budget rides out a just-killed JVM.
-    waitForQuietHost(cores = math.max(4, cpus.toInt / 2), maxWaitSec = 60)
-    // GRAFT_MASTER=local-cluster[...] measures across forked executor
-    // JVMs (evidence mode, not the graded configuration — see Cluster)
-    val spark = Cluster.configure(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE on by default since round 5: the round-4 twin artifacts
-      // measured AQE-on faster in aggregate (60.5 s vs 68.6 s) and 2.2×
-      // faster on the most expensive query (ensemble dedup's CC loop —
-      // coalescing + join re-planning on its small intermediate edge
-      // sets). The AQE-off twin remains the secondary artifact.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      // The generated-class cache defaults to 100 entries; this suite's 52
-      // queries compile several codegen units each, so two sequential
-      // passes over a 100-entry LRU evict-and-recompile in BOTH passes —
-      // measured as the r2 sessionize "outlier" (15.6 s in both passes vs
-      // 0.97 s warm; the plan itself was innocent). Static conf: must be
-      // set before the first session is created.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // a wedged broadcast must fail ONE query (and be recorded), not
-      // hang the run until the driver's wall-clock cap kills everything
-      .config("spark.sql.broadcastTimeout", "600")
-      // heartbeat headroom: local-mode heartbeats share the JVM with the
-      // executor threads; host CPU-steal bursts + GC must not accumulate
-      // 60 consecutive misses (the round-1 failure mode)
-      .config("spark.executor.heartbeatInterval", "20s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeat.maxFailures", "180")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val sc = spark.sparkContext
-    sc.setLogLevel(sys.env.getOrElse("GRAFT_LOG", "WARN"))
+    waitForQuietHost(cores = math.max(4, Runtime.cpus / 2), maxWaitSec = 60)
+    val rt = Runtime(Runtime.session("graft-bench"))
+    val spark = rt.spark
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Executor task CPU time per job group (= per query): the drift-
-    // immune companion to wall-clock. Host CPU-steal bursts inflate
-    // wall time but not task CPU; the regression detector prefers CPU
-    // when both rounds carry it, so a contaminated host can no longer
-    // burn a round of judging on phantom regressions.
-    val stageToGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val cpuNs =
-      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g != null) js.stageIds.foreach(sid => stageToGroup.put(sid, g))
-      }
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val g = stageToGroup.get(te.stageId)
-        if (g != null && te.taskMetrics != null)
-          cpuNs.computeIfAbsent(g,
-            _ => new java.util.concurrent.atomic.AtomicLong())
-            .addAndGet(te.taskMetrics.executorCpuTime)
-      }
-    })
-    def cpuSnap(name: String): Long =
-      Option(cpuNs.get(name)).map(_.get()).getOrElse(0L)
-    // listener events are async: drain the bus before reading a delta
-    // (LiveListenerBus.waitUntilEmpty is bytecode-public; fall back to a
-    // short sleep if the reflective call ever breaks)
-    def drainListeners(): Unit = try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      try bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      catch { case _: NoSuchMethodException =>
-        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(bus, java.lang.Long.valueOf(10000L))
-      }
-    } catch { case _: Throwable => Thread.sleep(100) }
     val cpuSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // One watchdogged execution of a query: a worker thread (job group is
-    // thread-local) that a timeout can cancel without wedging the bench.
+    // Timed-pass CPU is the steady-state number (the warm pass burns
+    // extra CPU on interpreted pre-JIT execution by design).
     def runOnce(name: String, fn: (SparkSession, String) => DataFrame,
         timed: Boolean): Double = {
-      val cpu0 = { drainListeners(); cpuSnap(name) }
-      val task = new FutureTask[Double](() => {
-        sc.setJobGroup(name, name, interruptOnCancel = true)
-        try {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        } finally sc.clearJobGroup()
-      })
-      val th = new Thread(task, s"bench-$name")
-      th.setDaemon(true)
-      th.start()
-      val dt = try task.get(queryTimeoutSec, TimeUnit.SECONDS) catch {
-        case _: TimeoutException =>
-          sc.cancelJobGroup(name)
+      val dt = rt.run(name, queryTimeoutSec)(rt.timed(name)(fn(spark, sfDir).count())) match {
+        case Runtime.Done(t) =>
+          if (timed) cpuSecs(name) = t.cpuSec
+          t.wallSec
+        case Runtime.TimedOut =>
           if (timed) errors(name) = "Timeout"
           -1.0
-        case e: Throwable =>
-          val c = if (e.getCause != null) e.getCause else e
+        case Runtime.Failed(c) =>
           if (timed) errors(name) = c.getClass.getSimpleName
           -1.0
-      }
-      // queries that persist intermediates (LSH signature tables) must not
-      // bleed cache/memory pressure into the next query's measurement
-      spark.catalog.clearCache()
-      // timed-pass CPU: the steady-state number (the warm pass burns
-      // extra CPU on interpreted pre-JIT execution by design)
-      if (timed && dt >= 0) {
-        drainListeners()
-        cpuSecs(name) = (cpuSnap(name) - cpu0) / 1e9
       }
       val tag = if (timed) "" else " (warm)"
       System.err.println(f"[bench] $name%-28s ${if (dt < 0) "FAIL" else f"$dt%.2fs"}$tag")
@@ -327,35 +265,7 @@ object Bench {
     // query, its methods compiled long ago — pass 2 measures steady-state
     // execution, which is the thing being graded. Disable via
     // GRAFT_WARM_PASS=false.
-    // GRAFT_ONLY=a,b,c restricts the run to named queries — an iteration
-    // aid for tuning a single operator; the full suite is the default.
-    // A selection that matches NOTHING (typo'd names) fails fast: the
-    // old fallback-to-full-suite silently escalated a one-query
-    // iteration loop into an hours-scale run nobody asked for. A blank
-    // GRAFT_ONLY (explicitly "all") still means the full suite.
-    val selected: Map[String, (SparkSession, String) => DataFrame] =
-      sys.env.get("GRAFT_ONLY") match {
-        case Some(names) =>
-          val keep = names.split(',').map(_.trim).filter(_.nonEmpty).toSet
-          if (keep.isEmpty) SparkEntry.queries
-          else {
-            val unknown = keep.diff(SparkEntry.queries.keySet)
-            if (unknown.nonEmpty)
-              System.err.println(s"[bench] GRAFT_ONLY names not in registry: " +
-                unknown.mkString(","))
-            val picked = SparkEntry.queries.filter { case (n, _) => keep(n) }
-            if (picked.isEmpty) {
-              System.err.println("[bench] FATAL: GRAFT_ONLY selected zero " +
-                "queries — check the names above")
-              spark.stop()
-              sys.exit(2)
-            }
-            picked
-          }
-        case None => SparkEntry.queries
-      }
-    val fullRun = selected.size == SparkEntry.queries.size
-    val calibStart = calibrate(spark, "calib_start", cpuSnap, drainListeners)
+    val calibStart = calibrate(rt, "calib_start")
     System.err.println(f"[bench] calib_start ${calibStart}%.2fs CPU (fixed work)")
     val warmTimes: Map[String, Double] =
       if (sys.env.getOrElse("GRAFT_WARM_PASS", "true") == "true")
@@ -373,168 +283,77 @@ object Bench {
         else t // warm run was still a complete, clean execution — report it
       name -> dt
     }
-    val calibEnd = calibrate(spark, "calib_end", cpuSnap, drainListeners)
+    val calibEnd = calibrate(rt, "calib_end")
     System.err.println(f"[bench] calib_end ${calibEnd}%.2fs CPU (fixed work)")
-    def r3(v: Double): Double = math.round(v * 1000.0) / 1000.0
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"\"$k\":\"$v\"" }
-      .mkString("{", ",", "}")
-    val total = r3(results.values.filter(_ >= 0).sum)
-    // Per-query regression tracking: diff against the last round's
-    // per-query numbers (committed bench_detail.json, else the driver
-    // artifact's tail). A query is a regression if it is >1.5x its
-    // previous number AND the absolute delta is >0.25s (filters JVM
-    // noise on sub-second queries). When BOTH rounds carry task-CPU
-    // time for a query, CPU decides — it is immune to the host drift
-    // that burned three rounds of judging on phantom wall-clock
-    // regressions; wall-clock remains the fallback for history written
-    // before CPU was recorded. Read BEFORE overwriting bench_detail.json.
-    val (prev, prevCpu, prevCalib, prevBuilds) = prevRoundTimes(sfDir)
-    // CPU numbers are normalized by the fixed-work calibration ratio
-    // (advisor r11: the scaladoc promised it but the gate diffed raw
-    // CPU, so host-speed drift could fake or mask regressions). The
-    // ratio is clamped to [0.5, 2]: a corrupted calib in either round
-    // must not be able to swallow a real 2× regression.
+    // Per-query regression gate against the previous round (read BEFORE
+    // bench_detail.json is overwritten). CPU decides when both rounds
+    // carry it for a query — it is immune to the host drift that made
+    // wall-clock flag phantom regressions — scaled by the calibration
+    // ratio, clamped so a corrupted calib cannot swallow a real 2×
+    // regression; wall is the fallback for history without CPU.
+    val base = baseline(sfDir)
     val calibNow = math.min(calibStart, calibEnd)
     val calibRatio =
-      if (prevCalib > 0 && calibNow > 0)
-        math.max(0.5, math.min(2.0, calibNow / prevCalib))
+      if (base.calib > 0 && calibNow > 0)
+        math.max(0.5, math.min(2.0, calibNow / base.calib))
       else 1.0
     if (calibRatio != 1.0)
       System.err.println(f"[bench] regression gate calib ratio " +
-        f"$calibRatio%.3f (now $calibNow%.2f / prev $prevCalib%.2f)")
-    val regressions = results.flatMap { case (n, t) =>
-      (prevCpu.get(n), cpuSecs.get(n)) match {
-        case (Some(pc0), Some(cc)) if pc0 > 0 && cc > 0 =>
-          val pc = pc0 * calibRatio
-          if (cc > pc * 1.5 && cc - pc > 0.25)
-            Some(n -> math.round(cc / pc * 100.0) / 100.0)
-          else None
-        case _ =>
-          if (t > 0 && prev.get(n).exists(p => p > 0 && t > p * 1.5 && t - p > 0.25))
-            Some(n -> math.round(t / prev(n) * 100.0) / 100.0)
-          else None
-      }
-    }
-    val regJson = regressions.map { case (k, v) => s"\"$k\":$v" }
-      .mkString("{", ",", "}")
-    // WALL-axis regression map (r13 verdict item 2: the arbiter lived
-    // in prose). Task-CPU attribution inflates up to 5x on sub-second
-    // queries under memory-bus/SMT contention — invisible to the
-    // register-only calibration spin — so a CPU-only flag set burns a
-    // round of adjudication on phantom regressions (25 of r13's 29 CPU
-    // flags were flat on wall). Same thresholds as the CPU map, over
-    // RAW best-observed wall (min of warm/timed — already a 2-sample
-    // noise floor): the calibration spin probes CPU speed, not wall
-    // characteristics, so scaling wall baselines by it would let a
-    // clamped 2x CPU drift hide a genuine wall regression from the
-    // gate (review finding) — and the legacy wall fallback above is
-    // raw too, so one axis keeps one normalization. The GATE is
-    // regressions_both: a query is a real regression only when BOTH
-    // axes flag it; either single-axis map alone is the documented
-    // attribution/load-drift class.
+        f"$calibRatio%.3f (now $calibNow%.2f / prev ${base.calib}%.2f)")
+    // The WALL-axis map compares raw best-observed wall: task-CPU
+    // attribution inflates up to 5x on sub-second queries under
+    // memory-bus/SMT contention, which the register-only calibration
+    // spin cannot see, and the spin probes CPU speed, not wall. The GATE
+    // is regressions_both: a real regression is flagged on both axes.
     val regressionsWall = results.flatMap { case (n, t) =>
-      prev.get(n) match {
-        case Some(p) if p > 0 && t > 0 =>
-          if (t > p * 1.5 && t - p > 0.25)
-            Some(n -> math.round(t / p * 100.0) / 100.0)
-          else None
-        case _ => None
-      }
+      base.wall.get(n).flatMap(ratio(t, _, 0.25)).map(n -> _)
+    }
+    val regressions = results.flatMap { case (n, _) =>
+      ((base.cpu.get(n), cpuSecs.get(n)) match {
+        case (Some(pc), Some(cc)) if pc > 0 && cc > 0 => ratio(cc, pc * calibRatio, 0.25)
+        case _ => regressionsWall.get(n)
+      }).map(n -> _)
     }
     val regressionsBoth = regressions.filter { case (n, _) =>
       regressionsWall.contains(n) }
-    def regMapJson(m: Iterable[(String, Double)]): String =
-      m.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    val regWallJson = regMapJson(regressionsWall)
-    val regBothJson = regMapJson(regressionsBoth)
-    if (regressionsBoth.nonEmpty)
-      System.err.println("[bench] BOTH-AXIS regressions (the gate): " +
-        regressionsBoth.toSeq.sortBy(-_._2)
-          .map { case (k, v) => f"$k=$v%.2f" }.mkString(", "))
+    def report(label: String, m: collection.Map[String, Double]): Unit =
+      if (m.nonEmpty) System.err.println(s"[bench] $label: " +
+        byValueDesc(m).map { case (k, v) => f"$k=$v%.2f" }.mkString(", "))
+    report("BOTH-AXIS regressions (the gate)", regressionsBoth)
     // One-time index-build cost (band tables, centroid/codebook builds,
-    // shared pair tables). The warm pass pays it and the timed pass
-    // serves the memoized build — correct amortized accounting for an
-    // index, but the price must be VISIBLE, not hidden: report each
-    // build's wall-clock seconds and the sum alongside the query times.
+    // shared pair tables): the warm pass pays it and the timed pass
+    // serves the memoized build, so each build's wall seconds are
+    // reported beside the query times. Builds gate like queries, over
+    // fingerprint-stripped keys with a 0.5 s floor; a NEW key costing
+    // ≥ 2 s flags as "new:<key>" instead of hiding in the total.
     val builds = operators.Materialize.buildTimes
-    val buildJson = builds.toSeq.sortBy(-_._2)
-      .map { case (k, v) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
-    val buildTotal = r3(builds.values.sum)
-    // Index-build regression gate (r12 verdict item 4: the build total
-    // doubled with zero gate coverage — every query was individually
-    // flat while 20 s of new one-time builds rode in unflagged). Same
-    // protocol as the per-query gate — keys are fingerprint-stripped
-    // for cross-round identity, the baseline is scaled by the fixed-
-    // work calibration ratio, and a build flags at >1.5× with >0.5 s
-    // absolute delta (builds are wall seconds; the higher floor keeps
-    // sub-second builds out of JVM-noise territory). NEW keys flag at
-    // any cost ≥ 2 s ("new:<key>") so a fresh expensive build is
-    // surfaced rather than hidden in the total.
     val buildRegressions: Map[String, Double] =
-      if (prevBuilds.isEmpty) Map.empty
+      if (base.builds.isEmpty) Map.empty
       else builds.toSeq.map { case (k0, v) => (buildKeyOf(k0), v) }
         .groupMapReduce(_._1)(_._2)(_ + _)
         .flatMap { case (k, v) =>
-          prevBuilds.get(k) match {
-            case Some(p0) if p0 > 0 =>
-              val p = p0 * calibRatio
-              if (v > p * 1.5 && v - p > 0.5)
-                Some(k -> math.round(v / p * 100.0) / 100.0)
-              else None
-            case _ =>
-              if (v >= 2.0) Some(s"new:$k" -> r3(v).toDouble) else None
+          base.builds.get(k).filter(_ > 0) match {
+            case Some(p) => ratio(v, p * calibRatio, 0.5).map(k -> _)
+            case None => if (v >= 2.0) Some(s"new:$k" -> r3(v)) else None
           }
         }
-    if (buildRegressions.nonEmpty)
-      System.err.println("[bench] index-build regressions: " +
-        buildRegressions.toSeq.sortBy(-_._2)
-          .map { case (k, v) => f"$k=$v%.2f" }.mkString(", "))
-    val buildRegJson = buildRegressions.toSeq.sortBy(-_._2)
-      .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    val cpuJson = cpuSecs.map { case (k, v) => s"\"$k\":${r3(v)}" }
-      .mkString("{", ",", "}")
-    val cpuTotal = r3(cpuSecs.values.sum)
-    // TASK CPU is the committed headline metric since round 10 (r9
-    // verdict item 7): the same closing registry measured 54.3 → 66.0 s
-    // WALL across one evening on this host (BENCH_NOTES_r09.md) while
-    // task CPU stayed flat — wall is no longer a usable cross-round
-    // gate signal at this suite size. Wall is retained as "wall_total"
-    // / "queries" for context; the regression detector already prefers
-    // CPU when both rounds carry it.
-    val calibJson = s"""{"start":${r3(calibStart)},"end":${r3(calibEnd)}}"""
-    val detailed = s"""{"metric":"cpu_total","value":$cpuTotal,"unit":"sec","wall_total":$total,"queries":$qs,"cpu":$cpuJson,"errors":$errJson,"regressions":$regJson,"regressions_wall":$regWallJson,"regressions_both":$regBothJson,"index_build":$buildJson,"index_build_total":$buildTotal,"index_build_regressions":$buildRegJson,"calib_cpu_sec":$calibJson,"sf":"$sfDir"}"""
-    // Full detail to a committed file (next round's regression baseline,
-    // and the judge's full-precision record) — from any run that covered
-    // the whole registry (a blank GRAFT_ONLY counts); a filtered run
-    // would shrink the baseline to the subset and corrupt the next full
-    // run's regression diff.
+    report("index-build regressions", buildRegressions)
+    val result = Result(results, cpuSecs, errors, regressions, regressionsWall,
+      regressionsBoth, builds, buildRegressions, calibStart, calibEnd, sfDir)
+    val detailed = detailLine(result)
+    // The full detail goes to bench_detail.json (the next round's
+    // baseline) only from a run that covered the whole registry: a
+    // filtered run would shrink the baseline to its subset.
     if (fullRun) try {
       val w = new java.io.PrintWriter("bench_detail.json")
       try w.println(detailed) finally w.close()
     } catch { case e: Throwable =>
       System.err.println(s"[bench] detail write failed: $e") }
-    // ...then the detailed line, then a compact total line LAST. The
-    // driver captures only the final 2000 chars of output: the detailed
-    // line for 100+ queries (~3 KB) truncates mid-JSON there (round-3
-    // artifact had "parsed": null), while the compact line always fits
-    // and carries the graded total.
+    // A grader that keeps only the final 2000 chars of output would see
+    // the detailed line for 100+ queries truncated, while the compact
+    // line always fits and carries the graded total — so it goes LAST.
     println(detailed)
-    // the compact line must stay well under the 2000-char tail even in a
-    // pathological round: cap its error/regression maps at the 8 worst
-    // (the detail line and file carry the full maps)
-    def cap8(m: Iterable[(String, String)], n: Int): String = {
-      val kept = m.take(8).map { case (k, v) => s"\"$k\":$v" }.mkString(",")
-      val extra = if (n > 8) s",\"_more\":${n - 8}" else ""
-      s"{$kept$extra}"
-    }
-    val errC = cap8(errors.map { case (k, v) => k -> s"\"$v\"" }, errors.size)
-    val regC = cap8(regressions.toSeq.sortBy(-_._2).map { case (k, v) => k -> v.toString },
-      regressions.size)
-    val regBothC = cap8(regressionsBoth.toSeq.sortBy(-_._2)
-      .map { case (k, v) => k -> v.toString }, regressionsBoth.size)
-    println(s"""{"metric":"cpu_total","value":$cpuTotal,"unit":"sec","wall_total":$total,"nqueries":${results.size},"detail":"bench_detail.json","errors":$errC,"regressions":$regC,"regressions_both":$regBothC,"index_build_total":$buildTotal,"calib_cpu_sec":$calibJson,"sf":"$sfDir"}""")
+    println(compactLine(result))
     spark.stop()
     // daemon worker threads may hold a wedged query; don't let them block exit
     sys.exit(0)

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Materialize, Tokenizer}
+import Runtime.Timed
 
 /** BPE trainer at the 1 GB operating point — the scale proof for the
   * claim in Tokenizer's scaladoc: the ONLY corpus-sized cost is the
@@ -26,17 +26,8 @@ object BpeFlagship {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_bpe1g"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bpe-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rt = Runtime(Runtime.session("graft-bpe-flagship"))
+    val spark = rt.spark
 
     // ---- untimed setup: the DedupFlagship corpus, cached across runs.
     // The cache key includes nDocs — a rerun at a different size must
@@ -51,15 +42,8 @@ object BpeFlagship {
     val docs = spark.read.parquet(corpusDir)
     val bytes = docs.agg(sum("n_chars")).head().getLong(0)
 
-    def timed[T](name: String)(f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"stage $name%-12s $dt%8.1f s")
-      (r, dt)
-    }
 
-    val (words, tWc) = timed("word_count") {
+    val Timed(words, tWc, _) = rt.stage("word_count") {
       val w = Materialize.stage(Tokenizer.initWords(docs))
       w.count() // the stage is eager, but pin the row count for the report
       w
@@ -67,7 +51,7 @@ object BpeFlagship {
     val nTypes = words.count()
     val nTokens = words.agg(sum("freq")).head().getLong(0)
 
-    val (st, tLoop) = timed("merge_loop") {
+    val Timed(st, tLoop, _) = rt.stage("merge_loop") {
       val s = Tokenizer.learnBpeFrom(words, Tokenizer.Rounds)
       s.merges.count() // force the last round's argmax
       s
@@ -75,7 +59,7 @@ object BpeFlagship {
     val merges = st.merges.orderBy("rank").collect()
       .map(r => s"${r.getString(2).stripPrefix("(").stripSuffix(")")}:${r.getLong(3)}")
 
-    val (encoded, tEnc) = timed("encode") {
+    val Timed(encoded, tEnc, _) = rt.stage("encode") {
       val counts = st.vocab.select(col("word"),
         size(regexp_extract_all(col("sym"), lit("\\([^)]*\\)"), lit(0)))
           .cast("long").as("n_sym"))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
 
 /** Multi-process execution evidence — the claim this engine inherits
   * from the reference (1 coordinator + N worker PROCESSES — reference
@@ -44,37 +43,16 @@ import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
   */
 object ClusterCheck {
   private val RowsOnly = Set("agg_approx_distinct", "agg_approx_percentiles")
+  /** Nodes in the chain graph of the executor-loss checks. */
+  private val ChainN = 200000L
 
-  private def session(master: String, shufflePartitions: Int): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val b = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.broadcastTimeout", "600")
+  private def session(master: String, partitions: Int): SparkSession =
+    Runtime.session("graft-cluster-check", master, Seq(
+      "spark.sql.shuffle.partitions" -> partitions.toString,
       // reliable checkpoint dirs are never self-deleted by Spark; the
       // cleaner removes each CC round's files once its RDD is unreachable
       // (Materialize.stage scaladoc — the cluster-mode requirement)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-    val withMaster =
-      if (Cluster.isCluster(master)) {
-        require(sys.env.contains("SPARK_HOME"),
-          s"$master needs SPARK_HOME so the standalone worker can fork executors")
-        b.master(master)
-          .config("spark.executor.extraClassPath",
-            System.getProperty("java.class.path"))
-          .config("spark.executor.extraJavaOptions", Cluster.execOpts)
-          .config("spark.task.maxFailures", "8")
-          .config("spark.stage.maxConsecutiveAttempts", "8")
-      } else b.master(master)
-    val s = withMaster.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true"))
 
   /** Canonical content hash: row strings sorted, md5 — partition-layout
     * independent for every registered query (none uses rand / partition
@@ -91,25 +69,15 @@ object ClusterCheck {
   private def runHashed(spark: SparkSession, name: String,
       fn: (SparkSession, String) => DataFrame, sfDir: String,
       timeoutSec: Long, errors: collection.mutable.Map[String, String])
-      : Option[(Long, String)] = {
-    val sc = spark.sparkContext
-    val task = new FutureTask[(Long, String)](() => {
-      sc.setJobGroup(name, name, interruptOnCancel = true)
-      try resultHash(fn(spark, sfDir)) finally sc.clearJobGroup()
-    })
-    val th = new Thread(task, s"cluster-$name"); th.setDaemon(true); th.start()
-    val r = try Some(task.get(timeoutSec, TimeUnit.SECONDS)) catch {
-      case _: TimeoutException =>
-        sc.cancelJobGroup(name); errors(name) = "Timeout"; None
-      case e: Throwable =>
-        val c = if (e.getCause != null) e.getCause else e
+      : Option[(Long, String)] =
+    Runtime(spark).run(name, timeoutSec)(resultHash(fn(spark, sfDir))) match {
+      case Runtime.Done(h) => Some(h)
+      case Runtime.TimedOut => errors(name) = "Timeout"; None
+      case Runtime.Failed(c) =>
         errors(name) = c.getClass.getSimpleName + ": " +
           String.valueOf(c.getMessage).take(120)
         None
     }
-    spark.catalog.clearCache()
-    r
-  }
 
   /** Kill `n` forked executor JVMs (children running
     * CoarseGrainedExecutorBackend), after `delayMs`. The flag records
@@ -154,9 +122,7 @@ object ClusterCheck {
     val clusterMaster =
       sys.env.getOrElse("GRAFT_CLUSTER_MASTER", "local-cluster[2,8,4096]")
     val timeoutSec = sys.env.getOrElse("GRAFT_QUERY_TIMEOUT", "300").toLong
-    val chainN = sys.env.getOrElse("GRAFT_CHAIN_N", "200000").toLong
-    val only = sys.env.get("GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
+    val selected = Runtime.selected(SparkEntry.queries)
     val indexDir =
       java.nio.file.Files.createTempDirectory("graft-cluster-index").toString
     val ckptDir =
@@ -170,7 +136,7 @@ object ClusterCheck {
     val localHashes = selected.map { case (n, fn) =>
       n -> runHashed(sLocal, n, fn, sfDir, timeoutSec, errors)
     }
-    val localChain = resultHash(chainClusters(sLocal, chainN))
+    val localChain = resultHash(chainClusters(sLocal, ChainN))
     sLocal.stop()
 
     // ---- Phase B: the same queries across forked executor JVMs ----
@@ -224,7 +190,7 @@ object ClusterCheck {
     sc1.sparkContext.setCheckpointDir(s"file:$ckptDir")
     sc1.conf.set(operators.Materialize.ReliableConf, "true")
     val (killer, killHappened) = killExecutors(1, delayMs = 4000)
-    val killedChain = try Some(resultHash(chainClusters(sc1, chainN)))
+    val killedChain = try Some(resultHash(chainClusters(sc1, ChainN)))
       catch { case e: Throwable =>
         errors("cc_kill") = e.getClass.getSimpleName; None }
     killer.join(15000)
@@ -249,9 +215,13 @@ object ClusterCheck {
     sc1.stop()
 
     val mismatches = perQuery.filter(_._2 != "match").map(_._1)
-    val errJson = errors.map { case (k, v) => s""""$k":"$v"""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"cluster_check","master":"$clusterMaster","sf":"$sfDir","queries_total":${selected.size},"queries_match":$nMatch,"mismatches":${mismatches.map("\"" + _ + "\"").mkString("[", ",", "]")},"durable_cross_topology":$durableOk,"durable_bare_scan":$bareScan,"cc_executor_kill_ok":$ccKillOk,"query_executor_kill_ok":$queryKillOk,"chain_n":$chainN,"errors":$errJson}""")
+    println(Runtime.mapper.writeValueAsString(Runtime.obj(Seq(
+      "metric" -> "cluster_check", "master" -> clusterMaster, "sf" -> sfDir,
+      "queries_total" -> selected.size, "queries_match" -> nMatch,
+      "mismatches" -> java.util.List.of(mismatches: _*),
+      "durable_cross_topology" -> durableOk, "durable_bare_scan" -> bareScan,
+      "cc_executor_kill_ok" -> ccKillOk, "query_executor_kill_ok" -> queryKillOk,
+      "chain_n" -> ChainN, "errors" -> Runtime.obj(errors)))))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(indexDir))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(clusterIndexDir))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckptDir))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Search
+import Runtime.Timed
 
 /** Index-lifecycle flagship at ~1 GB (r10 verdict item 2): the
   * incremental postings index driven END-TO-END through the lifecycle
@@ -43,23 +44,9 @@ object CompactionFlagship {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse("/tmp/graft_compact1g")
     val nDocs = if (args.length > 1) args(1).toLong else 3300000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-compaction-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rt = Runtime(Runtime.session("graft-compaction-flagship"))
+    val spark = rt.spark
 
-    def timed[T](name: String)(f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"stage $name%-20s $dt%8.1f s")
-      (r, dt)
-    }
     def r2(v: Double) = math.round(v * 100) / 100.0
 
     // ---- generation layout -----------------------------------------
@@ -74,12 +61,12 @@ object CompactionFlagship {
         df.write.mode("overwrite").parquet(dir)
       spark.read.parquet(dir)
     }
-    val (basePost, tBase) = timed("base_index")(writeOnce(s"$work/base_n$nDocs",
+    val Timed(basePost, tBase, _) = rt.stage("base_index")(writeOnce(s"$work/base_n$nDocs",
       Search.postings(gen(spark, 0, baseN).repartition(64))))
     val deltas = (1 to nGens).map { g =>
       val lo = baseN + (g - 1) * deltaN
       val hi = if (g == nGens) nDocs else baseN + g * deltaN
-      val (d, t) = timed(s"delta_$g")(writeOnce(s"$work/delta${g}_n$nDocs",
+      val Timed(d, t, _) = rt.stage(s"delta_$g")(writeOnce(s"$work/delta${g}_n$nDocs",
         Search.postingsDelta(gen(spark, lo, hi).repartition(8))))
       (d, t)
     }
@@ -121,9 +108,9 @@ object CompactionFlagship {
     // min of 2 reps per point (rep 1 of gen 0 absorbs codegen)
     def probeSec(idx: DataFrame, dl: Option[DataFrame]): (Long, Double) = {
       val reps = (1 to 2).map { _ =>
-        timed("probe")(Search.bm25SearchFor(idx, terms, dl = dl).count())
+        rt.stage("probe")(Search.bm25SearchFor(idx, terms, dl = dl).count())
       }
-      (reps.head._1, reps.map(_._2).min)
+      (reps.head.value, reps.map(_.wallSec).min)
     }
     val curve = (0 to nGens).map { g =>
       val (rows, sec) = probeSec(stack(g), Some(dlStack(g)))
@@ -141,7 +128,7 @@ object CompactionFlagship {
 
     // ---- compact: write the served view as the new durable base ----
     val compactDir = s"$work/compacted_n$nDocs"
-    val (_, tCompact) = timed("compact")(
+    val Timed(_, tCompact, _) = rt.stage("compact")(
       stack(nGens).write.mode("overwrite").parquet(compactDir))
     val compacted = spark.read.parquet(compactDir)
     // the compacted epoch starts with a fresh durable dl (part of the
@@ -162,7 +149,7 @@ object CompactionFlagship {
     // the raw documents, maintained-index paths included
     val survivors = gen(spark, 0, nDocs).repartition(64)
       .join(tombs, Seq("doc_id"), "left_anti")
-    val (rebuildRows, tRebuild) = timed("rebuild_probe")(
+    val Timed(rebuildRows, tRebuild, _) = rt.stage("rebuild_probe")(
       probeRows(Search.postings(survivors), None))
     val parityRebuild = rebuildRows == compactedProbe
 
@@ -182,7 +169,7 @@ object CompactionFlagship {
       s""""parity_stack_vs_compacted":$parityStack,""" +
       s""""parity_vs_rebuild":$parityRebuild,""" +
       s""""row_arithmetic_exact":$arithmetic,""" +
-      s""""compacted_rows":$nCompacted,"cpus":$cpus}""")
+      s""""compacted_rows":$nCompacted,"cpus":${Runtime.cpus}}""")
     spark.stop()
     if (!(parityStack && parityRebuild && arithmetic)) sys.exit(1)
   }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import Runtime.Timed
 
 /** Dedup flagship at ~1 GB: the full near-dup pipeline — capped band
   * index → LSH candidate pairs → exact-jaccard verify → connected
@@ -104,17 +105,8 @@ object DedupFlagship {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_dedup1g"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-dedup-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rt = Runtime(Runtime.session("graft-dedup-flagship"))
+    val spark = rt.spark
 
     // ---- untimed setup
     val corpusDir = s"$work/corpus"
@@ -126,36 +118,25 @@ object DedupFlagship {
     val docs = spark.read.parquet(corpusDir)
     val bytes = docs.agg(sum("n_chars")).head().getLong(0)
 
-    def timed[T](name: String)(f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"stage $name%-12s $dt%8.1f s")
-      (r, dt)
-    }
-
     // ---- timed pipeline, stage by stage (each stage materialized so
-    // the timings attribute to the right operator)
-    // production-hash band index (one xxhash64 + 8 affine permutations
-    // per gram vs the oracle path's two md5 digests — Dedup.fastBandTable
-    // scaladoc; GRAFT_MD5_BANDS=true re-runs the md5 variant for the
-    // before/after comparison recorded in DEDUP_1GB.md)
-    val useMd5 = sys.env.getOrElse("GRAFT_MD5_BANDS", "false").toBoolean
-    val (bands, tIndex) = timed("band_index") {
-      if (useMd5) Dedup.cappedBands(Dedup.wordGrams(docs), Dedup.MaxBandBucket)
-      else Dedup.cappedBands(Dedup.wordGrams(docs), Dedup.MaxBandBucket,
+    // the timings attribute to the right operator). The band index uses
+    // the production hash (one xxhash64 + 8 affine permutations per gram
+    // instead of the oracle path's two md5 digests — Dedup.fastBandTable
+    // scaladoc; the md5 before/after is in DEDUP_1GB.md).
+    val Timed(bands, tIndex, _) = rt.stage("band_index") {
+      Dedup.cappedBands(Dedup.wordGrams(docs), Dedup.MaxBandBucket,
         table = Dedup.fastBandTable)
     }
-    val (pairs, tPairs) = timed("pairs") {
+    val Timed(pairs, tPairs, _) = rt.stage("pairs") {
       Dedup.nearDupPairsFromBands(docs, bands, Dedup.wordGrams, Threshold)
         .localCheckpoint()
     }
     val nPairs = pairs.count()
-    val (clusters, tClusters) = timed("clusters") {
+    val Timed(clusters, tClusters, _) = rt.stage("clusters") {
       Dedup.nearDupClusters(pairs).localCheckpoint()
     }
     val nClustered = clusters.count()
-    val (canon, tCanon) = timed("canonical") {
+    val Timed(canon, tCanon, _) = rt.stage("canonical") {
       Dedup.canonicalDocs(docs, clusters).localCheckpoint()
     }
     val nClusters = canon.count()
@@ -163,7 +144,7 @@ object DedupFlagship {
 
     // ---- ground truth: planted pairs refined by their EXACT gram-set
     // jaccard (same tokenizer/gram/set semantics as the operator)
-    val (truthAgg, tTruth) = timed("truth") {
+    val Timed(truthAgg, tTruth, _) = rt.stage("truth") {
       val p = planted(spark, nDocs)
       val ids = p.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
       val sets = Dedup.shingleSets(
@@ -188,7 +169,7 @@ object DedupFlagship {
     }
     val recall = truthAgg("hit").toDouble / math.max(1L, truthAgg("truth"))
     val precisionVsPlanted = truthAgg("hit").toDouble / math.max(1L, nPairs)
-    println(f"""{"metric":"dedup_1gb","docs":$nDocs,"bytes":$bytes,"pairs":$nPairs,"truth_pairs":${truthAgg("truth")},"recall":$recall%.4f,"precision_vs_planted":$precisionVsPlanted%.4f,"extra_pairs":${truthAgg("extra")},"far_planted_found":${truthAgg("planted_far_found")},"clustered_docs":$nClustered,"clusters":$nClusters,"dropped_docs":$nDropped,"index_sec":${f"$tIndex%.1f"},"pairs_sec":${f"$tPairs%.1f"},"clusters_sec":${f"$tClusters%.1f"},"canonical_sec":${f"$tCanon%.1f"},"truth_sec":${f"$tTruth%.1f"},"cpus":$cpus}""")
+    println(f"""{"metric":"dedup_1gb","docs":$nDocs,"bytes":$bytes,"pairs":$nPairs,"truth_pairs":${truthAgg("truth")},"recall":$recall%.4f,"precision_vs_planted":$precisionVsPlanted%.4f,"extra_pairs":${truthAgg("extra")},"far_planted_found":${truthAgg("planted_far_found")},"clustered_docs":$nClustered,"clusters":$nClusters,"dropped_docs":$nDropped,"index_sec":${f"$tIndex%.1f"},"pairs_sec":${f"$tPairs%.1f"},"clusters_sec":${f"$tClusters%.1f"},"canonical_sec":${f"$tCanon%.1f"},"truth_sec":${f"$tTruth%.1f"},"cpus":${Runtime.cpus}}""")
     spark.stop()
   }
 }

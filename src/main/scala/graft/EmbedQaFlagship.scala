@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{Pipeline, Similarity}
 
 /** Embedding-QA flagship at ~1M vectors (r12 verdict item 6): the
@@ -42,44 +41,8 @@ object EmbedQaFlagship {
     val nVecs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_embedqa1m"
     val eventsDir = if (args.length > 2) args(2) else "/tmp/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-embedqa-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val sc = spark.sparkContext
-    sc.setLogLevel("WARN")
-
-    // task-CPU accumulator (stages run sequentially, so a global
-    // counter with a bus drain between snapshots attributes exactly)
-    val cpuAcc = new java.util.concurrent.atomic.AtomicLong()
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          cpuAcc.addAndGet(te.taskMetrics.executorCpuTime)
-    })
-    def drain(): Unit = try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      try bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      catch { case _: NoSuchMethodException =>
-        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(bus, java.lang.Long.valueOf(10000L))
-      }
-    } catch { case _: Throwable => Thread.sleep(100) }
-    def timed[T](name: String)(f: => T): (T, Double, Double) = {
-      drain(); val c0 = cpuAcc.get(); val t0 = System.nanoTime()
-      val r = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      drain(); val cpu = (cpuAcc.get() - c0) / 1e9
-      println(f"stage $name%-22s wall $wall%8.1f s   cpu $cpu%8.1f s")
-      (r, wall, cpu)
-    }
+    val rt = Runtime(Runtime.session("graft-embedqa-flagship"))
+    val spark = rt.spark
 
     // ---- corpus (shared ANN generator; reused across runs)
     val corpusDir = s"$work/corpus_$nVecs"
@@ -92,10 +55,10 @@ object EmbedQaFlagship {
 
     // ---- 1. PCA per-pass cost (cumulative runs; marginal = one pass)
     val pcaRuns = (1 to 6).map { k =>
-      val (rows, w, c) = timed(s"pca_iters_$k") {
+      val t = rt.stage(s"pca_iters_$k") {
         Similarity.embeddingPcaPower(emb, iters = k).collect()
       }
-      (k, rows, w, c)
+      (k, t.value, t.wallSec, t.cpuSec)
     }
     println("pca marginal per-pass cost (run k minus run k-1):")
     pcaRuns.sliding(2).foreach { case Seq((_, _, w1, c1), (k2, _, w2, c2)) =>
@@ -103,18 +66,18 @@ object EmbedQaFlagship {
     }
 
     // ---- 2. orbit determinism at iters=6
-    val (rerun, _, _) = timed("pca_iters_6_rerun") {
+    val rerun = rt.stage("pca_iters_6_rerun") {
       Similarity.embeddingPcaPower(emb, iters = 6).collect()
-    }
+    }.value
     val orbit6 = pcaRuns.last._2
     require(orbit6.map(_.toSeq).toSeq == rerun.map(_.toSeq).toSeq,
       "PCA integer orbit must reproduce row-for-row across runs")
     println("pca orbit determinism: OK (iters=6 rerun identical)")
 
     // ---- 3. JL projection audit at 1M
-    val (jl, _, _) = timed("jl_audit") {
+    val jl = rt.stage("jl_audit") {
       Similarity.randomProjectionAudit(emb).collect()
-    }
+    }.value
     jl.foreach { r =>
       println(s"  jl stride=${r.getLong(0)} n_pairs=${r.getLong(1)} " +
         s"mean_ratio_ppm=${r.getLong(2)} min=${r.getLong(3)} " +
@@ -122,9 +85,9 @@ object EmbedQaFlagship {
     }
 
     // ---- 4. split drift at 1M
-    val (sd, _, _) = timed("split_drift") {
+    val sd = rt.stage("split_drift") {
       Similarity.embeddingSplitDrift(emb).collect()
-    }
+    }.value
     println(s"  split_drift rows: ${sd.length}")
 
     // ---- 5. ks/psi at 10x events (sf1)
@@ -133,9 +96,9 @@ object EmbedQaFlagship {
       val ev = Tables.events(spark, eventsDir)
       val n = ev.count()
       println(s"events at $eventsDir: $n rows")
-      val (ks, _, _) = timed("ks_drift_10x") { Pipeline.ksDrift(ev).collect() }
+      val ks = rt.stage("ks_drift_10x") { Pipeline.ksDrift(ev).collect() }.value
       println(s"  ks rows: ${ks.length}")
-      val (psi, _, _) = timed("psi_drift_10x") { Pipeline.psiDrift(ev).collect() }
+      val psi = rt.stage("psi_drift_10x") { Pipeline.psiDrift(ev).collect() }.value
       println(s"  psi rows: ${psi.length}")
     } else println(s"events dir $eventsDir absent - ks/psi leg skipped " +
       "(generate with scripts/run.sh graft.GenSf /tmp/sf1 10)")

@@ -1,23 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan and wall time of one
-  * registry query. Usage: graft.Explain <queryName> [sfDir]. */
+  * registry query in the session Bench measures (AQE on, so the plan
+  * printed is the initial adaptive plan). Usage: graft.Explain
+  * <queryName> [sfDir]. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runtime.session("graft-explain")
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
     val t0 = System.nanoTime()

@@ -16,8 +16,9 @@ import graft.sources.{JsonSink, TextIngest}
   * is the reference's full O1→O13 dataflow:
   *
   *   fetchCached(file://corpus.zip)            O1  (download+memoize)
-  *   extractZipUtf8 (errors=ignore transcode)  O2
-  *   readLines, 32 MB line-aligned splits      O3–O4
+  *   extractZipRaw + readLinesLenient
+  *     (distributed errors=ignore decode,
+  *     32 MB line-aligned splits)              O2–O4
   *   tokenCounts (tokenize → combine →
   *     hash shuffle → reduce SUM)              O5–O10
   *   writeReduceObjects (per-partition JSON)   O11–O12
@@ -84,16 +85,8 @@ object Flagship1G {
   def main(args: Array[String]): Unit = {
     val targetBytes = args.headOption.map(_.toLong).getOrElse(1000000000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_1gb"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-flagship-1g")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Runtime.cpus
+    val spark = Runtime.session("graft-flagship-1g")
 
     // ---- untimed setup: synthesize + zip the corpus (stands in for the
     // enwik9 download the zero-egress sandbox cannot perform)
@@ -106,32 +99,23 @@ object Flagship1G {
         f"${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
 
-    // ---- timed: the reference's O1→O13 dataflow. Default path extracts
-    // RAW bytes (I/O only) and runs the errors=ignore decode inside the
-    // distributed job (readLinesLenient) — the serial whole-file
-    // transcode (GRAFT_SERIAL_DECODE=true, the reference's literal
-    // shape) measured 19.1 s of the 30.9 s total, i.e. the pipeline's
-    // only non-scaling stage; the distributed decode removes it.
-    val serialDecode = sys.env.getOrElse("GRAFT_SERIAL_DECODE", "false") == "true"
+    // ---- timed: the reference's O1→O13 dataflow. The zip member is
+    // extracted as RAW bytes (I/O only) and the errors=ignore decode runs
+    // inside the distributed job (readLinesLenient): the serial
+    // whole-file transcode (extractZipUtf8 + readLines, the reference's
+    // literal shape) measured 19.1 s of the 30.9 s total, the pipeline's
+    // only non-scaling stage (BASELINE_1GB.md).
     val t0 = System.nanoTime()
     val cached = TextIngest.fetchCached(s"file://$zipPath", s"$work/cache")
     // files[0]: the reference processes the first archive member only
-    val (files, mkDocs) =
-      if (serialDecode) {
-        val fs = TextIngest.extractZipUtf8(
-          Files.newInputStream(cached), s"$work/extract")
-        (fs, () => TextIngest.readLines(spark, fs.head).toDF("text"))
-      } else {
-        val fs = TextIngest.extractZipRaw(
-          Files.newInputStream(cached), s"$work/extract_raw")
-        (fs, () => TextIngest.readLinesLenient(spark, fs.head).toDF("text"))
-      }
+    val files = TextIngest.extractZipRaw(
+      Files.newInputStream(cached), s"$work/extract_raw")
     val tExtract = System.nanoTime()
-    val docs = mkDocs()
+    val docs = TextIngest.readLinesLenient(spark, files.head).toDF("text")
     val counts = WordCount.tokenCounts(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // NUM_REDUCERS = 2 × parallelism (reference coordinator.py:11)
-    JsonSink.writeReduceObjects(counts, s"$work/out", 2 * cpus.toInt)
+    JsonSink.writeReduceObjects(counts, s"$work/out", 2 * cpus)
     // top-20 from the SAME persisted counts (WordCount.top20 semantics;
     // the one tokenize pass feeds both the sink and the report)
     val top20 = counts

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (r14 optimization round): sweep EVERY registry query's
   * physical plan at a small sf and print the operator counts that
   * localize duplicated-subtree waste — parquet scans, exchanges,
@@ -15,15 +13,10 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // The one setting that differs from the bench: a static plan count
+    // needs a plan that does not change at run time.
+    val spark = Runtime.session("graft-plan-audit",
+      extra = Seq("spark.sql.adaptive.enabled" -> "false"))
     spark.sparkContext.setLogLevel("ERROR")
     val rows = SparkEntry.registry.map { q =>
       val counts = try {

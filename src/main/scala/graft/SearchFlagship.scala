@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Pipeline, Search}
+import Runtime.Timed
 
 /** Search + packing flagship at ~1 GB of text — the last operator
   * families without a ≥1 GB measurement: the positional inverted
@@ -46,28 +47,14 @@ object SearchFlagship {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse("/tmp/graft_search1g")
     val nDocs = if (args.length > 1) args(1).toLong else 3300000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-search-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rt = Runtime(Runtime.session("graft-search-flagship"))
+    val spark = rt.spark
 
-    def timed[T](name: String)(f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"stage $name%-16s $dt%8.1f s")
-      (r, dt)
-    }
 
     // ---- corpus ----------------------------------------------------
     val docDir = s"$work/docs_n$nDocs"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$docDir/_SUCCESS"))) {
-      val (_, sec) = timed("gen") {
+      val Timed(_, sec, _) = rt.stage("gen") {
         genDocs(spark, 0, nDocs)
           .repartition(64).write.mode("overwrite").parquet(docDir)
       }
@@ -89,29 +76,29 @@ object SearchFlagship {
       java.nio.file.Files.exists(java.nio.file.Paths.get(s"$idxDir/_SUCCESS"))
     val buildSec: Option[Double] =
       if (reused) None
-      else Some(timed("index_build")(
-        Search.postings(docs).write.mode("overwrite").parquet(idxDir))._2)
+      else Some(rt.stage("index_build")(
+        Search.postings(docs).write.mode("overwrite").parquet(idxDir)).wallSec)
     val idx = spark.read.parquet(idxDir)
     val nPost = idx.count()
 
     // the per-doc length table is PART OF THE INDEX (a pure function of
     // it, precomputed once like the centroid tables) — its build cost is
     // reported separately; probes below pay only posting-list work
-    val (dl, tDl) = timed("doc_lengths")(
+    val Timed(dl, tDl, _) = rt.stage("doc_lengths")(
       Search.docLengths(idx).localCheckpoint())
 
     // ---- probes (must be posting-list-bounded) ---------------------
-    val (nBm, tBm) = timed("bm25")(
+    val Timed(nBm, tBm, _) = rt.stage("bm25")(
       Search.bm25SearchFor(idx, terms, dl = Some(dl)).count())
-    val (nKw, tKw) = timed("keyword")(
+    val Timed(nKw, tKw, _) = rt.stage("keyword")(
       Search.keywordSearchFor(idx, terms).count())
-    val (nPh, tPh) = timed("phrase")(
+    val Timed(nPh, tPh, _) = rt.stage("phrase")(
       Search.phraseSearchFor(idx, phrase).count())
-    val (ndcgRow, tNd) = timed("ndcg")(
+    val Timed(ndcgRow, tNd, _) = rt.stage("ndcg")(
       Search.searchEvalNdcg(idx, terms, dl = Some(dl)).head())
 
     // ---- sequence packing over the same corpus ---------------------
-    val (packStats, tPack) = timed("packing") {
+    val Timed(packStats, tPack, _) = rt.stage("packing") {
       val p = Pipeline.packedSequences(docs, capacity = 2048L)
         .agg(count(lit(1)), sum(col("n_tokens")), sum(col("n_docs"))).head()
       (p.getLong(0), p.getLong(1), p.getLong(2))
@@ -126,7 +113,7 @@ object SearchFlagship {
       s""""phrase":{"rows":$nPh,"sec":${r2(tPh)}},""" +
       s""""ndcg":{"permille":${ndcgRow.getLong(4)},"n_relevant":${ndcgRow.getLong(0)},"sec":${r2(tNd)}},""" +
       s""""packing":{"sequences":${packStats._1},"tokens":${packStats._2},"doc_memberships":${packStats._3},"sec":${r2(tPack)}},""" +
-      s""""cpus":$cpus}""")
+      s""""cpus":${Runtime.cpus}}""")
     spark.stop()
   }
 }

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, SimJoin}
+import Runtime.Timed
 
 /** Exact-similarity-join flagship at ~1 GB: run the AllPairs/PPJoin
   * EXACT jaccard join ([[graft.operators.SimJoin]]) over the same
@@ -38,17 +38,8 @@ object SimJoinFlagship {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_dedup1g"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-simjoin-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rt = Runtime(Runtime.session("graft-simjoin-flagship"))
+    val spark = rt.spark
 
     val corpusDir = s"$work/corpus"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$corpusDir/_SUCCESS"))) {
@@ -59,30 +50,22 @@ object SimJoinFlagship {
     val docs = spark.read.parquet(corpusDir)
     val bytes = docs.agg(sum("n_chars")).head().getLong(0)
 
-    def timed[T](name: String)(f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"stage $name%-12s $dt%8.1f s")
-      (r, dt)
-    }
-
     // ---- exact path: canonical-order gram index → prefix join → verify
-    val (index, tIndex) = timed("gram_index") {
+    val Timed(index, tIndex, _) = rt.stage("gram_index") {
       SimJoin.rankedGramIndex(docs, Dedup.wordGrams).localCheckpoint()
     }
-    val (exact, tExact) = timed("exact_join") {
+    val Timed(exact, tExact, _) = rt.stage("exact_join") {
       SimJoin.jaccardJoinFromIndex(index, Threshold._1, Threshold._2)
         .localCheckpoint()
     }
     val nExact = exact.count()
 
     // ---- LSH path on the SAME corpus (production xxhash64 bands)
-    val (bands, tLshIndex) = timed("lsh_index") {
+    val Timed(bands, tLshIndex, _) = rt.stage("lsh_index") {
       Dedup.cappedBands(Dedup.wordGrams(docs), Dedup.MaxBandBucket,
         table = Dedup.fastBandTable)
     }
-    val (lsh, tLshPairs) = timed("lsh_pairs") {
+    val Timed(lsh, tLshPairs, _) = rt.stage("lsh_pairs") {
       Dedup.nearDupPairsFromBands(docs, bands, Dedup.wordGrams, 0.7)
         .localCheckpoint()
     }
@@ -96,7 +79,7 @@ object SimJoinFlagship {
     val lshOutside = lshPairs.join(exactPairs, Seq("doc_a", "doc_b"), "left_anti").count()
 
     // ---- completeness cross-check vs refined planted truth
-    val (missingPlanted, tTruth) = timed("truth_check") {
+    val Timed(missingPlanted, tTruth, _) = rt.stage("truth_check") {
       val p = DedupFlagship.planted(spark, nDocs)
       val ids = p.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
       val sets = Dedup.shingleSets(
@@ -115,7 +98,7 @@ object SimJoinFlagship {
     val lshRecall = lshHit.toDouble / math.max(1L, nExact)
     val exactSec = tIndex + tExact
     val lshSec = tLshIndex + tLshPairs
-    println(f"""{"metric":"ssjoin_1gb","docs":$nDocs,"bytes":$bytes,"exact_pairs":$nExact,"lsh_pairs":$nLsh,"lsh_recall_vs_exact":$lshRecall%.4f,"lsh_outside_exact":$lshOutside,"missing_planted":$missingPlanted,"exact_index_sec":${f"$tIndex%.1f"},"exact_join_sec":${f"$tExact%.1f"},"exact_total_sec":${f"$exactSec%.1f"},"lsh_total_sec":${f"$lshSec%.1f"},"exact_vs_lsh_cost":${f"${exactSec / math.max(0.1, lshSec)}%.2f"},"truth_sec":${f"$tTruth%.1f"},"cpus":$cpus}""")
+    println(f"""{"metric":"ssjoin_1gb","docs":$nDocs,"bytes":$bytes,"exact_pairs":$nExact,"lsh_pairs":$nLsh,"lsh_recall_vs_exact":$lshRecall%.4f,"lsh_outside_exact":$lshOutside,"missing_planted":$missingPlanted,"exact_index_sec":${f"$tIndex%.1f"},"exact_join_sec":${f"$tExact%.1f"},"exact_total_sec":${f"$exactSec%.1f"},"lsh_total_sec":${f"$lshSec%.1f"},"exact_vs_lsh_cost":${f"${exactSec / math.max(0.1, lshSec)}%.2f"},"truth_sec":${f"$tTruth%.1f"},"cpus":${Runtime.cpus}}""")
     spark.stop()
   }
 }

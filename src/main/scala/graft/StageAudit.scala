@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Stage-level CPU attribution for one registry query (r11 verdict
   * item 3: "is the bm25 family's 7–9 s sf0.1 floor fixed machinery or
   * a hidden corpus-sized stage?"). Runs `SparkEntry.queries(name)`
@@ -16,55 +13,20 @@ object StageAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Cluster.configure(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    final case class St(id: Int, name: String, cpuSec: Double,
-        recordsIn: Long, shuffleReadRec: Long, shuffleWriteRec: Long,
-        tasks: Int)
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[St]()
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val i = e.stageInfo
-        val m = i.taskMetrics
-        stages.add(St(i.stageId, i.name,
-          m.executorCpuTime / 1e9,
-          m.inputMetrics.recordsRead,
-          m.shuffleReadMetrics.recordsRead,
-          m.shuffleWriteMetrics.recordsWritten,
-          i.numTasks))
-      }
-    }
-
+    val rt = Runtime(Runtime.session("graft-stage-audit"))
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      fn(spark, sfDir).collect() // warm: codegen + index builds
-      stages.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).collect().length
-      val wall = (System.nanoTime() - t0) / 1e9
-      // stage events are posted async; give the bus a beat to drain
-      // (listenerBus is private[spark]; a bounded sleep suffices here)
-      Thread.sleep(1500)
-      spark.sparkContext.removeSparkListener(listener)
-      import scala.jdk.CollectionConverters._
-      val ss = stages.asScala.toSeq.sortBy(-_.cpuSec)
-      println(f"== $name: $n rows, wall $wall%.2f s, " +
+      fn(rt.spark, sfDir).collect() // warm: codegen + index builds
+      val t = rt.timed(name)(fn(rt.spark, sfDir).collect().length)
+      val ss = t.counters.stages.sortBy(-_.cpuSec)
+      println(f"== $name: ${t.value} rows, wall ${t.wallSec}%.2f s, " +
         f"stage CPU total ${ss.map(_.cpuSec).sum}%.2f s, ${ss.size} stages")
       ss.foreach { s =>
         println(f"  stage ${s.id}%4d cpu=${s.cpuSec}%7.2f s tasks=${s.tasks}%3d " +
-          f"in=${s.recordsIn}%10d shufR=${s.shuffleReadRec}%9d " +
-          f"shufW=${s.shuffleWriteRec}%9d  ${s.name.linesIterator.next()}")
+          f"in=${s.recordsIn}%10d shufR=${s.shuffleReadRecords}%9d " +
+          f"shufW=${s.shuffleWriteRecords}%9d  ${s.name.linesIterator.next()}")
       }
     }
-    spark.stop()
+    rt.spark.stop()
   }
 }

@@ -47,18 +47,6 @@ object StreamResume {
   // results stay comparable by construction (review finding)
   import StreamFlagship.{EvSchema, eventSlice, flushSentinel, sessionChecksum}
 
-  private def session(app: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
   /** One main-replay leg: the sessionize query over the backlog as
     * ~32 micro-batches, AvailableNow, parquet sink + checkpoint. */
   private def runMain(spark: SparkSession, evDir: String, out: String,
@@ -108,8 +96,7 @@ object StreamResume {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--child")) {
       // forked main-replay leg — the parent SIGKILLs this JVM mid-run
-      val spark = session("graft-stream-resume-child")
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Runtime.session("graft-stream-resume-child")
       runMain(spark, args(1), args(2), args(3))
       spark.stop()
       return
@@ -117,8 +104,7 @@ object StreamResume {
     val work = args.headOption.getOrElse("/tmp/graft_stream_resume")
     val nEvents = if (args.length > 1) args(1).toLong else 16000000L
     val killAfter = if (args.length > 2) args(2).toInt else 10
-    val spark = session("graft-stream-resume")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runtime.session("graft-stream-resume")
 
     // ---- backlog (the StreamFlagship event generator + slice shape:
     // event time strictly increasing with id, sequential slice writes
@@ -155,7 +141,7 @@ object StreamResume {
     // the child gets the SAME JDK17 --add-opens set every other forked
     // JVM in this repo gets — one maintained list (review finding: an
     // inline copy would drift when a Spark upgrade adds a module)
-    val addOpens = Cluster.execOpts.split(" ").toSeq
+    val addOpens = Runtime.execOpts.split(" ").toSeq
     val cmd = (Seq(s"${System.getProperty("java.home")}/bin/java") ++ addOpens ++
       Seq("-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "-Xmx12g", "-cp", System.getProperty("java.class.path"),
