@@ -63,8 +63,7 @@ object BpeFlagship {
       val counts = st.vocab.select(col("word"),
         size(regexp_extract_all(col("sym"), lit("\\([^)]*\\)"), lit(0)))
           .cast("long").as("n_sym"))
-      docs.select(col("doc_id"), explode(regexp_extract_all(lower(col("text")),
-          lit(operators.WordCount.TokenPattern), lit(0))).as("word"))
+      docs.select(col("doc_id"), explode(operators.WordCount.tokenArray(docs)).as("word"))
         .join(broadcast(counts), "word")
         .agg(sum(col("n_sym")).as("n_symbols"), count(lit(1)).as("n_toks"))
         .head()

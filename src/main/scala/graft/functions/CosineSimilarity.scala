@@ -107,6 +107,11 @@ object GraftFunctions {
   val nfcNormalizeBuilder: Seq[Expression] => Expression =
     exprs => NfcNormalize(exprs(0))
 
+  /** `word_tokens(text)` ≡ `regexp_extract_all(lower(text), '[a-z'']+', 0)`:
+    * Catalyst's own `Lower` stays in the plan as the child. */
+  val wordTokensBuilder: Seq[Expression] => Expression =
+    exprs => WordTokens(org.apache.spark.sql.catalyst.expressions.Lower(exprs(0)))
+
   /** Spark ships a Bloom-filter build/probe pair as Catalyst expressions
     * (`BloomFilterAggregate` / `BloomFilterMightContain`, the machinery
     * behind its own runtime-filter join pruning) but does not register
@@ -135,6 +140,7 @@ object GraftFunctions {
     reg.createOrReplaceTempFunction("cosine_sim", cosineSimBuilder, "scala_udf")
     reg.createOrReplaceTempFunction("lsh_bucket", lshBucketBuilder, "scala_udf")
     reg.createOrReplaceTempFunction("nfc_normalize", nfcNormalizeBuilder, "scala_udf")
+    reg.createOrReplaceTempFunction("word_tokens", wordTokensBuilder, "scala_udf")
     reg.createOrReplaceTempFunction("graft_bloom_agg", bloomAggBuilder, "scala_udf")
     reg.createOrReplaceTempFunction("graft_might_contain", mightContainBuilder, "scala_udf")
   }
@@ -173,6 +179,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("nfc_normalize"),
       new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
       GraftFunctions.nfcNormalizeBuilder))
+    e.injectFunction((
+      new FunctionIdentifier("word_tokens"),
+      new ExpressionInfo(classOf[WordTokens].getName, "word_tokens"),
+      GraftFunctions.wordTokensBuilder))
     e.injectFunction((
       new FunctionIdentifier("graft_bloom_agg"),
       new ExpressionInfo(

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.WordCount.tokenArray
 import graft.functions.Exact.{ln4, ln4Sql}
 
 /** MODEL-EVALUATION operators — the classifier-diagnostics layer a
@@ -39,9 +40,6 @@ object MlEval {
 
   private val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
 
-  private def toks: Column =
-    regexp_extract_all(lower(col("text")), lit(graft.operators.WordCount.TokenPattern), lit(0))
-
   /** Shared md5-bucket split SQL for the oracles — COMPOSED from the
     * one [[TextAnalysisQueries.nibSql]] ascii-arithmetic helper (the
     * shared-literal rule: a nibble-convention edit must not need a
@@ -59,7 +57,7 @@ object MlEval {
     * a score-definition change happens here or nowhere. */
   private def enScored(docs: DataFrame): DataFrame =
     docs
-      .select((col("lang") === "en").cast("long").as("y"), toks.as("w"))
+      .select((col("lang") === "en").cast("long").as("y"), tokenArray(docs).as("w"))
       .filter(size(col("w")) > 0)
       .select(col("y"),
         size(col("w")).cast("long").as("n_tokens"),
@@ -121,7 +119,7 @@ object MlEval {
     // three tokenize passes it would save (measured 7.6 → 12.6 s CPU —
     // the tokenCooccurrence stage-or-not lesson, re-measured here)
     val base = docs
-      .select(col("doc_id"), col("lang"), toks.as("w"),
+      .select(col("doc_id"), col("lang"), tokenArray(docs).as("w"),
         splitOfKey(col("doc_id")).as("split"))
       .filter(size(col("w")) > 0)
     val trainTok = base.filter(col("split") === "train")

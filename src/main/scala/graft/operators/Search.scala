@@ -45,8 +45,7 @@ object Search {
     * document (reported 1-based at query output). */
   def postings(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        posexplode(regexp_extract_all(lower(col("text")),
-          lit(WordCount.TokenPattern), lit(0))).as(Seq("pos", "tok")))
+        posexplode(WordCount.tokenArray(docs)).as(Seq("pos", "tok")))
       .select(col("tok"), col("doc_id"), col("pos"))
 
   /** Per-(term, doc) term frequencies from the index. */
@@ -113,15 +112,15 @@ object Search {
   }
 
   /** [[phraseSearch]] for an EXPLICIT phrase of ANY length ≥ 1 — the
-    * audit-a-leaked-passage form. The phrase is tokenized with the
-    * index's own token pattern; each token contributes one
+    * audit-a-leaked-passage form. The phrase is tokenized exactly as
+    * the index tokenizes text ([[WordCount.tokenize]]: the same `lower`
+    * and byte split); each token contributes one
     * posting-list leg joined at pos+j (the n=3 chain of the registry
     * probe, generalized by a fold). A phrase containing any
     * out-of-vocabulary token matches nothing and returns the empty
     * result shape. */
   def phraseSearchFor(idx: DataFrame, phrase: String): DataFrame = {
-    val ts = WordCount.TokenPattern.r
-      .findAllIn(phrase.toLowerCase).toList
+    val ts = WordCount.tokenize(phrase)
     require(ts.nonEmpty, "phrase needs at least one token")
     val m0 = idx.filter(col("tok") === ts.head)
       .select(col("doc_id"), col("pos"))
@@ -173,7 +172,9 @@ object Search {
 
   /** [[keywordSearch]] for an EXPLICIT query-term list — the form a
     * caller with an actual query uses; the registry entry keeps the
-    * corpus-derived deterministic query for the oracle. An
+    * corpus-derived deterministic query for the oracle. Each term is
+    * tokenized as the index tokenizes text ([[WordCount.tokenize]]), so
+    * "Data" finds `data` under any default locale. An
     * out-of-vocabulary term has no df row and contributes nothing; a
     * query of only OOV terms returns the empty result (correct shape,
     * zero rows), never an error. */
@@ -191,7 +192,7 @@ object Search {
     // from the precomputed doc-length index when the caller has one
     // (count of dl rows ≡ countDistinct(doc_id) over the index: dl IS
     // the per-doc grouping), else a staged full-index countDistinct.
-    val sub = idx.filter(col("tok").isin(terms.map(_.toLowerCase): _*))
+    val sub = idx.filter(col("tok").isin(terms.flatMap(WordCount.tokenize): _*))
     val tf = Materialize.stage(termFreq(sub))
     val dft = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val nDocs = dl.map(_.agg(count(lit(1)).as("n_docs")))
@@ -270,7 +271,7 @@ object Search {
   private def scoreBm25AllFor(idx: DataFrame, terms: Seq[String],
       dl: Option[DataFrame]): DataFrame = {
     require(terms.nonEmpty, "query needs at least one term")
-    val sub = idx.filter(col("tok").isin(terms.map(_.toLowerCase): _*))
+    val sub = idx.filter(col("tok").isin(terms.flatMap(WordCount.tokenize): _*))
     val tf = Materialize.stage(termFreq(sub))
     scoreBm25All(idx, tf, tf.groupBy("term").agg(count(lit(1)).as("df")), dl)
   }
@@ -444,7 +445,7 @@ object Search {
   def searchEvalNdcg(idx: DataFrame, terms: Seq[String],
       k: Int = 20, dl: Option[DataFrame] = None): DataFrame = {
     require(terms.nonEmpty, "query needs at least one term")
-    val q = terms.map(_.toLowerCase).distinct
+    val q = terms.flatMap(WordCount.tokenize).distinct
     // ONE posting-list-bounded tf subtree (the static isin reaches the
     // scan) feeds both the relevance leg and the BM25 ranking leg —
     // the per-(term,doc) aggregate covers only the query terms'

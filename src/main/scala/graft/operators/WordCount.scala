@@ -1,6 +1,9 @@
 package graft.operators
 
+import graft.functions.{GraftFunctions, WordTokens}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** The reference engine's core dataflow — tokenize → map-side combine →
@@ -8,7 +11,8 @@ import org.apache.spark.sql.functions._
   * Catalyst plans over `documents.text`.
   *
   * Reference semantics reproduced (see SURVEY.md §2.1):
-  *  - token regex `[A-Za-z']+`, lowercased (reference worker/worker.py:7,16-18)
+  *  - token regex `[A-Za-z']+`, lowercased (reference worker/worker.py:7,16-18),
+  *    computed by the native `word_tokens` expression ([[tokenArray]])
   *  - map-side partial aggregation = Spark's HashAggregate(partial), automatic
   *  - hash partitioning = ShuffleExchange (Murmur3; layout-independent results)
   *  - top-20 by (count DESC, length DESC) with the reference's unstable tie
@@ -24,15 +28,37 @@ import org.apache.spark.sql.functions._
 object WordCount {
 
   /** ASCII letters + apostrophe, after lowercasing — identical token
-    * alphabet to the reference's `[A-Za-z']+` + `.lower()`. */
+    * alphabet to the reference's `[A-Za-z']+` + `.lower()`. The engine
+    * tokenizes with [[tokenArray]]; the DuckDB oracle SQL and the specs
+    * keep this regex form as the independent reference. */
   val TokenPattern = "[a-z']+"
 
-  /** lines/docs → one row per token ("word"). A Generator (explode), so it
-    * stays inside whole-stage codegen; no UDF. */
+  /** The one tokenizer column, for use in `docs.select`: the `[a-z']+`
+    * runs of `docs.text` after Spark's `lower`, as `array<string>` —
+    * `word_tokens(text)`, the native [[graft.functions.WordTokens]] byte
+    * scan over Catalyst's `Lower`. Equal element for element to
+    * `regexp_extract_all(lower(text), '[a-z'']+', 0)`, null on null. */
+  def tokenArray(docs: DataFrame): Column = {
+    GraftFunctions.register(docs.sparkSession)
+    call_function("word_tokens", col("text"))
+  }
+
+  /** In-process twin of [[tokenArray]] for query strings: the same
+    * `Lower` and the same byte split, evaluated on a literal, so a query
+    * token is spelled exactly as the index spells the same text. (The
+    * JVM's `"IN".toLowerCase` is `"ın"` under a `tr` default locale;
+    * Spark's `lower` of ASCII text is `"in"` under every locale.) */
+  def tokenize(text: String): Seq[String] = {
+    val a = WordTokens(Lower(Literal(text))).eval().asInstanceOf[ArrayData]
+    Seq.tabulate(a.numElements())(a.getUTF8String(_).toString)
+  }
+
+  /** lines/docs → one row per token ("word"). The tokenizer is a native
+    * expression with generated code and explode is a codegen'd
+    * Generator, so tokenize → partial aggregate runs as one whole-stage
+    * codegen loop; no UDF, no regex. */
   def tokens(docs: DataFrame): DataFrame =
-    docs.select(
-      explode(regexp_extract_all(lower(col("text")), lit(TokenPattern), lit(0)))
-        .as("word"))
+    docs.select(explode(tokenArray(docs)).as("word"))
 
   /** Full word → count table (reference O7+O10: combiner + reduce SUM). */
   def tokenCounts(docs: DataFrame): DataFrame =
@@ -58,7 +84,7 @@ object WordCount {
   /** Per-document corpus stats — per-group aggregation over the generator
     * output without materializing tokens twice. */
   def docStats(docs: DataFrame): DataFrame = {
-    val toks = regexp_extract_all(lower(col("text")), lit(TokenPattern), lit(0))
+    val toks = tokenArray(docs)
     docs.select(
       col("doc_id"),
       length(col("text")).cast("long").as("n_chars"),

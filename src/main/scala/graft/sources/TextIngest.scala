@@ -9,9 +9,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 /** Ingest path reproducing the reference's source semantics (SURVEY.md
   * O1–O3): ZIP extraction with UTF-8 errors="ignore" transcode (invalid
   * byte sequences are DROPPED, not replaced — reference
-  * coordinator/coordinator.py:36-50), then line-aligned splits sized via
-  * `spark.sql.files.maxPartitionBytes` (the reference's 32 MB chunker,
-  * coordinator.py:57-89, is Spark's TextInputFormat split policy).
+  * coordinator/coordinator.py:36-50), then line-aligned splits of at
+  * most `splitBytes` (the reference's 32 MB chunker, coordinator.py:57-89,
+  * is Hadoop's TextInputFormat split policy). The split size is set on a
+  * copy of the Hadoop configuration, never on the caller's session.
   *
   * Driver-side utility by design: the reference's download/extract is
   * coordinator-side too; at scale the transcode would run once per file
@@ -78,12 +79,11 @@ object TextIngest {
     out.result()
   }
 
-  /** Line dataset with the reference's 32 MB line-aligned split policy. */
+  /** Line dataset with the reference's 32 MB line-aligned split policy.
+    * Invalid UTF-8 decodes to U+FFFD, as in Spark's own text reader. */
   def readLines(spark: SparkSession, path: String,
-      splitBytes: Long = DefaultSplitBytes): Dataset[String] = {
-    spark.conf.set("spark.sql.files.maxPartitionBytes", splitBytes.toString)
-    spark.read.textFile(path)
-  }
+      splitBytes: Long = DefaultSplitBytes): Dataset[String] =
+    lines(spark, path, splitBytes)(new String(_, StandardCharsets.UTF_8))
 
   /** Extract ZIP members as RAW BYTES (no transcode) — the fast I/O-only
     * step that [[readLinesLenient]] pairs with to make the decode
@@ -122,7 +122,13 @@ object TextIngest {
     * pipeline's only serial stage — at 100 TB the decode runs as ~3,000
     * map tasks per 100 GB instead of one coordinator thread. */
   def readLinesLenient(spark: SparkSession, path: String,
-      splitBytes: Long = DefaultSplitBytes): Dataset[String] = {
+      splitBytes: Long = DefaultSplitBytes): Dataset[String] =
+    lines(spark, path, splitBytes)(decodeLenient)
+
+  /** TextInputFormat lines of `path` in splits of at most `splitBytes`,
+    * each line's bytes decoded by `decode` in the executors. */
+  private def lines(spark: SparkSession, path: String, splitBytes: Long)(
+      decode: Array[Byte] => String): Dataset[String] = {
     import org.apache.hadoop.io.{LongWritable, Text}
     import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
     val conf = new org.apache.hadoop.conf.Configuration(
@@ -131,9 +137,7 @@ object TextIngest {
     val lines = spark.sparkContext
       .newAPIHadoopFile(path, classOf[TextInputFormat],
         classOf[LongWritable], classOf[Text], conf)
-      .map { case (_, t) =>
-        decodeLenient(java.util.Arrays.copyOf(t.getBytes, t.getLength))
-      }
+      .map { case (_, t) => decode(java.util.Arrays.copyOf(t.getBytes, t.getLength)) }
     import spark.implicits._
     spark.createDataset(lines)
   }

@@ -93,6 +93,24 @@ class SourcesSpec extends SparkSpec {
     assert(serialLines == Seq("héllo wörld", "second ligne", "tail no newline"))
   }
 
+  test("readLines leaves the session conf alone and reads the same lines in small splits") {
+    // lines with CRLF, invalid UTF-8 and no trailing newline; a 16-byte
+    // split cap forces several line-aligned splits
+    val dir = Files.createTempDirectory("graft-split").toString
+    val bytes = "alpha beta\r\ngamma ".getBytes("UTF-8") ++ Array(0xff.toByte) ++
+      "delta\nepsilon zeta eta theta\n\niota".getBytes("UTF-8")
+    Files.write(Paths.get(dir, "s.txt"), bytes)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    val lines = TextIngest.readLines(spark, dir + "/s.txt", splitBytes = 16)
+    val got = lines.collect().toSeq
+    assert(spark.conf.getOption(key) == before, s"$key changed by readLines")
+    assert(lines.rdd.getNumPartitions > 1, "the split cap was not applied")
+    assert(got == Seq("alpha beta", "gamma \uFFFDdelta", "epsilon zeta eta theta", "", "iota"))
+    assert(got == spark.read.textFile(dir + "/s.txt").collect().toSeq,
+      "lines differ from Spark's own text reader")
+  }
+
   test("readLines + wordcount over an extracted text file") {
     val dir = Files.createTempDirectory("graft-txt").toString
     Files.write(Paths.get(dir, "c.txt"), "Don't stop\nme now don't\n".getBytes("UTF-8"))
